@@ -5,7 +5,7 @@ Prints ONE JSON line:
    "queries": {name: sec, ...}, "sf": 0.1}``
 
 Env: ``SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1),
-``SPARK_GRAFT_CPUS`` (default 32).
+``SPARK_GRAFT_CPUS`` (default: the host's CPU count).
 
 Each query is a full action (collect/count of the final result) including
 plan+execute, excluding session startup and a one-time warmup that touches

@@ -310,3 +310,146 @@ def test_diff_change_feed(spark, tmp_path):
     v_now = store._current_version()
     assert [(r.change, r.id) for r in store.diff(v1, v_now).collect()] \
         == changes
+
+
+def _jobs_run(spark, fn):
+    """(result of ``fn()``, number of Spark jobs it ran)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"store-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job-start events reach the status tracker through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_warm_search_is_one_job_and_count_none(spark, tmp_path):
+    """A warm store answers ``search`` (1 or 16 queries) with one Spark job
+    and ``count`` with none: no count job, no broadcast, no shuffle, no
+    payload join."""
+    rng = np.random.default_rng(7)
+    vs = VectorStore(spark, tmp_path / "jobs", dim=DIM)
+    vs.insert(rng.standard_normal((200, DIM)).astype(np.float32),
+              gen_docs(range(200)))
+    q16 = rng.standard_normal((16, DIM)).astype(np.float32)
+    vs.search(q16[:1], k=5)  # fills the cache
+    res, jobs = _jobs_run(spark, lambda: vs.search(q16[:1], k=5))
+    assert jobs == 1 and len(res) == 1 and len(res[0]) == 5
+    res, jobs = _jobs_run(spark, lambda: vs.search(q16, k=5))
+    assert jobs == 1 and len(res) == 16
+    n, jobs = _jobs_run(spark, vs.count)
+    assert (n, jobs) == (200, 0)
+
+
+def _expr_knn(spark, vs, queries, k):
+    """Per query, the (id, distance) list of ``knn_search(impl="expr")``
+    over ``vs.df()``."""
+    from vector_db_at_home_spark.operators.knn import knn_search
+
+    qdf = spark.createDataFrame(
+        [(i, [float(x) for x in q]) for i, q in enumerate(queries)],
+        "query_id long, qvec array<float>",
+    )
+    out = [[] for _ in queries]
+    for r in knn_search(vs.df(), qdf, k, impl="expr").collect():
+        out[r.query_id].append((r.id, r.distance))
+    return out
+
+
+def test_search_exact_vs_expr_knn(spark, tmp_path):
+    """``search`` equals ``knn_search(impl="expr")`` exactly — same ids in
+    the same order, ``==`` distances — over a multi-file store with
+    exact-duplicate vectors; exact ties rank by ascending id."""
+    rng = np.random.default_rng(11)
+    vs = VectorStore(spark, tmp_path / "exact", dim=DIM)
+    base = rng.standard_normal((60, DIM)).astype(np.float32)
+    for lo in range(0, 60, 15):  # 4 inserts -> several files and batches
+        batch = base[lo:lo + 15]
+        vs.insert(np.concatenate([batch, batch[:3]]))  # 3 exact duplicates
+    # three more copies of base[0] (ids 0 and 15), written out of id order
+    vs.upsert([90, 70, 80], np.repeat(base[:1], 3, axis=0))
+    stored = vs.dump_vecs()
+    n = len(stored)
+    queries = np.concatenate([stored[::9][:8],
+                              rng.standard_normal((8, DIM)).astype(np.float32)])
+
+    for k in (7, n):
+        got = [[(r.id, r.distance) for r in recs]
+               for recs in vs.search(queries, k)]
+        assert got == _expr_knn(spark, vs, queries, k)
+        for recs in got:
+            for (i0, d0), (i1, d1) in zip(recs, recs[1:]):
+                assert d0 < d1 or (d0 == d1 and i0 < i1)
+    # one file, so one Arrow batch holds the whole 5-way tie (ids 0, 15,
+    # 70, 80, 90, upserted out of id order); cut at k=3 it keeps the three
+    # lowest ids
+    vs.compact(target_partitions=1)
+    assert [(r.id, r.distance) for r in vs.search(base[:1], 3)[0]] \
+        == [(0, 0.0), (15, 0.0), (70, 0.0)]
+
+    vs.delete([int(r.id) for r in vs.df().select("id").collect()])
+    assert vs.search(queries, 1) == []
+
+
+def test_search_exact_when_summation_order_matters(spark, tmp_path):
+    """At width 32 with components near 1e4 and 1e-1 the float64 sum of
+    the float32 squares depends on its order, so only a left-to-right fold
+    keeps ``search`` distances ``==`` to ``knn_search(impl="expr")``."""
+    width = 32
+    rng = np.random.default_rng(5)
+
+    def mixed(m):
+        scale = np.where(rng.random((m, width)) < 0.5, 1e4, 1e-1)
+        return (rng.standard_normal((m, width)) * scale).astype(np.float32)
+
+    stored = mixed(40)
+    queries = np.concatenate([stored[:8], mixed(8)])
+    # the data must tell the orders apart: pairwise ``sum`` != sequential
+    diff = stored[None, :, :] - queries[:, None, :]
+    sq = (diff * diff).astype(np.float64)
+    assert (np.sqrt(np.sum(sq, axis=2))
+            != np.sqrt(np.cumsum(sq, axis=2)[..., -1])).sum() > 50
+
+    vs = VectorStore(spark, tmp_path / "wide", dim=width)
+    vs.insert(stored[:25])
+    vs.insert(stored[25:])
+    k = len(stored)
+    got = [[(r.id, r.distance) for r in recs] for recs in vs.search(queries, k)]
+    assert got == _expr_knn(spark, vs, queries, k)
+
+
+def test_reads_see_other_writers(spark, tmp_path):
+    """Two stores on one root: ``a`` sees ``b``'s insert, ``b``'s delete and
+    a direct append into the snapshot dir (what ``stream_into_store`` does)
+    on its next read — the cache key is (version, part files), not the
+    version alone."""
+    from vector_db_at_home_spark.schema import VECTOR_SCHEMA
+
+    root = tmp_path / "shared"
+    a = VectorStore(spark, root, dim=DIM)
+    b = VectorStore(spark, root, dim=DIM)
+    a.insert(np.eye(DIM, dtype=np.float32))
+    assert a.count() == DIM
+    far = np.full((1, DIM), 50.0, dtype=np.float32)
+
+    b.insert(far, [{"from": "b"}])
+    assert a.count() == DIM + 1
+    hit = a.search(far, 1)[0][0]
+    assert (hit.id, hit.distance, hit.doc) == (DIM, 0.0, {"from": "b"})
+
+    b.delete([DIM])
+    assert a.count() == DIM
+    assert a.search(far, 1)[0][0].id != DIM
+
+    spark.createDataFrame(
+        [(99, [60.0] * DIM, '{"from": "append"}')], VECTOR_SCHEMA
+    ).write.mode("append").parquet(a._snapshot_dir(a._current_version()))
+    assert a.count() == DIM + 1
+    hit = a.search(np.full((1, DIM), 60.0, dtype=np.float32), 1)[0][0]
+    assert (hit.id, hit.doc) == (99, {"from": "append"})
+    assert [r.id for r in a.select_ids([99])] == [99]

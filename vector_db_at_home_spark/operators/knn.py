@@ -7,12 +7,16 @@ returns empty; ``k > N`` raises ValueError (``vector_store.py:279-284``).
 Tie-break among equal distances is unspecified in the reference (unstable
 argsort); we pin ``(distance ASC, id ASC)`` (SURVEY.md §2.2).
 
-Two physical strategies, same logical result:
+Two lazy physical strategies, same logical result:
 
 ``impl="expr"`` — pure Catalyst: ``crossJoin(broadcast(queries))`` +
-``zip_with/aggregate`` distance + window top-k.  Whole-stage codegen, no
-Python.  Best when m (queries) is small and you want a fully declarative plan
-the optimizer can reason about.
+``zip_with/aggregate`` distance + window top-k.  No Python, but not
+whole-stage codegen either: ``zip_with``/``aggregate`` are interpreted
+higher-order functions (the ``Project`` holding them carries no ``*(n)``
+codegen marker in ``explain()``), evaluated row by row over a
+``BroadcastNestedLoopJoin``.  A 16-query ``VectorStore.search`` built on it
+took about 1.3 s (6 Spark jobs) over 20k × 64 vectors on a 4-core host.  Use
+it when you want a fully declarative plan the optimizer can reason about.
 
 ``impl="pandas"`` — scalable kernel: ``mapInPandas`` over the index
 partitions; each task computes the full m×rows distance block with NumPy
@@ -21,6 +25,12 @@ emits only its LOCAL top-k per query.  A final window top-k merges the
 ``partitions × m × k`` candidates.  At 100 TB this is the right shape: the
 shuffle carries O(P·m·k) rows instead of O(N·m); queries are a broadcast
 variable, not a join side.
+
+``knn_search_collect`` is the eager form behind ``VectorStore.search``: one
+``mapInArrow`` pass over an (ideally cached) index whose tasks score every
+Arrow batch with the same arithmetic as ``impl="expr"`` and keep a
+tie-complete per-query top-k with every index column riding along, then one
+``collect()`` and a driver merge — one Spark job per call.
 """
 
 from __future__ import annotations
@@ -238,6 +248,90 @@ def _knn_pandas(index, queries, k, id_col, vec_col, query_id_col,
         )
     )
     return rescored.orderBy("query_id", "distance", "id")
+
+
+def _l2_float_fold(mat: np.ndarray, q: np.ndarray) -> np.ndarray:
+    """L2 distance from every row of ``mat`` to ``q`` (both float32) with
+    the arithmetic of :func:`l2_distance` on ``array<float>`` columns: a
+    float32 difference and square, a float64 left-to-right fold (``cumsum``
+    is sequential, unlike the pairwise ``sum``), then ``sqrt``.  The result
+    is bit-identical to the column expression."""
+    diff = mat - q
+    return np.sqrt(np.cumsum((diff * diff).astype(np.float64), axis=1)[:, -1])
+
+
+def _topk_positions(dist: np.ndarray, ids: np.ndarray, k: int) -> np.ndarray:
+    """Positions of the ``k`` smallest ``(dist, id)`` pairs, in that order.
+
+    The partition at the k-th distance keeps the whole tie group at the
+    boundary (``~(dist > kth)`` also keeps NaN, which sorts last as in
+    Spark), so the lexsort of that strip cannot drop a tied lower id."""
+    if len(dist) > k:
+        kth = np.partition(dist, k - 1)[k - 1]
+        strip = np.flatnonzero(~(dist > kth))
+    else:
+        strip = np.arange(len(dist))
+    return strip[np.lexsort((ids[strip], dist[strip]))][:k]
+
+
+def knn_search_collect(index: DataFrame, queries: np.ndarray, k: int
+                       ) -> list[list]:
+    """Eager exact L2 top-``k`` of each row of ``queries`` (an ``(m, dim)``
+    float32 matrix) against ``index`` in ONE Spark job.
+
+    Returns, per query, up to ``k`` Rows carrying every ``index`` column
+    plus ``query_id`` and ``distance``, ordered ``(distance, id)``.
+    Distances are bit-identical to ``knn_search(..., impl="expr")``.
+
+    Each task scores its Arrow batches of ``index`` (columns ``id`` long and
+    ``vec`` ``array<float>`` of width ``dim``, others ride along) and emits at most ``k`` rows per
+    query per batch; the driver merges those by ``(distance, id)``.  There
+    is no count, no query broadcast and no shuffle: the guards that need
+    the index size (empty index, ``k > N``) are the caller's, which
+    typically already knows N.  Point it at a cached DataFrame, or every
+    call re-reads the index."""
+    import pyarrow as pa
+    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+
+    if k <= 0:
+        raise ValueError(f"k must be positive, got {k}")
+    qmat = np.asarray(queries, dtype=np.float32)
+    if qmat.ndim != 2:
+        raise ValueError(f"queries must be a 2-D matrix, got {qmat.shape}")
+    if len(qmat) == 0:
+        return []
+    dim = qmat.shape[1]
+
+    def score(batches):
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0:
+                continue
+            ids = batch.column("id").to_numpy()
+            mat = batch.column("vec").flatten().to_numpy().reshape(n, dim)
+            pos, qids, dists = [], [], []
+            for qi, q in enumerate(qmat):
+                dist = _l2_float_fold(mat, q)
+                top = _topk_positions(dist, ids, k)
+                pos.append(top)
+                qids.append(np.full(len(top), qi, dtype=np.int64))
+                dists.append(dist[top])
+            hits = batch.take(pa.array(np.concatenate(pos)))
+            yield pa.RecordBatch.from_arrays(
+                hits.columns + [pa.array(np.concatenate(qids)),
+                                pa.array(np.concatenate(dists))],
+                names=hits.schema.names + ["query_id", "distance"],
+            )
+
+    schema = StructType(index.schema.fields + [
+        StructField("query_id", LongType()),
+        StructField("distance", DoubleType()),
+    ])
+    out: list[list] = [[] for _ in range(len(qmat))]
+    for r in index.mapInArrow(score, schema).collect():
+        out[r.query_id].append(r)
+    return [sorted(rs, key=lambda r: (r.distance, r.id))[:k]
+            for rs in out]
 
 
 def range_search(index: DataFrame, queries: DataFrame, radius: float,

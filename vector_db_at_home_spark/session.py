@@ -13,7 +13,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+#: ``local[N]`` width when no master is given: the host's cores, so callers
+#: that pass no master do not oversubscribe a small host
+DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
 
 
 def get_spark(app_name: str = "vector_db_at_home_spark",

@@ -4,9 +4,18 @@ The reference (``/root/reference/src/vector_db_at_home/vector_store.py:28-404``)
 is an embedded store: SQLite row store + an in-memory NumPy (id, vec) index
 kept consistent by hand.  Here the durable store is a Parquet **snapshot
 directory** (``<root>/v000042/``, latest pointer in ``<root>/_CURRENT``) and
-the "in-memory index" is Spark's columnar cache of the (id, vec) projection —
-the two-copies consistency burden disappears because both views derive from
-one source of truth (SURVEY.md §1.4).
+the "in-memory index" is ONE Spark columnar cache of the whole (id, vec, doc)
+snapshot, filled together with its row count — the two-copies
+consistency burden disappears because every read derives from one source of
+truth (SURVEY.md §1.4).  The cache is keyed by (current version, part files
+of that version's dir), so appends by any writer — this instance, another
+instance on the same root, ``stream_into_store`` — are seen by the next read.
+
+Read model: ``count()`` answers from the cache (no job); ``search`` is one
+Spark job (``operators.knn.knn_search_collect`` over the cached snapshot,
+payloads riding along — no count, no broadcast, no shuffle, no payload
+join); ``select_ids``, ``query_by_doc`` and ``search_by_doc`` scan the
+cached snapshot instead of re-reading parquet.
 
 Write model (designed for object storage at scale):
 - ``insert``  → append new parquet files into the current snapshot dir
@@ -33,11 +42,21 @@ from dataclasses import dataclass
 from typing import Any
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .operators.knn import knn_search
+from .operators.knn import knn_search_collect
 from .schema import VECTOR_SCHEMA
+
+
+@dataclass
+class _Snapshot:
+    """One filled read cache: the cached rows of exactly the part files
+    named in ``key``, with their row count."""
+
+    key: tuple[int, tuple[str, ...]]
+    df: DataFrame
+    n: int
 
 
 @dataclass
@@ -114,7 +133,10 @@ class VectorStore:
 
     The DataFrame-returning layer (``df()``, ``index_df()``) is public so lazy
     pipelines and the driver's ``queries()`` can compose plans without
-    collecting (SURVEY.md §7.4.6).
+    collecting (SURVEY.md §7.4.6).  ``df()`` is a fresh read of the snapshot
+    dir; ``index_df()`` and the eager reads (``count``, ``search``,
+    ``select_ids``, ``query_by_doc``, ``search_by_doc``) share one cache of
+    the current snapshot, refilled on the first read after any write.
 
     **Filesystem boundary (deliberate):** the snapshot pointer and marker
     plumbing here use driver-local ``os`` calls — this class mirrors the
@@ -132,7 +154,7 @@ class VectorStore:
         self.spark = spark
         self.root = str(root)
         self.dim = int(dim)
-        self._cached_index: DataFrame | None = None
+        self._cache: _Snapshot | None = None
         os.makedirs(self.root, exist_ok=True)
         if self._current_version() is None:
             self._write_snapshot(
@@ -163,9 +185,43 @@ class VectorStore:
         self._invalidate_cache()
 
     def _invalidate_cache(self) -> None:
-        if self._cached_index is not None:
-            self._cached_index.unpersist()
-            self._cached_index = None
+        if self._cache is not None:
+            self._cache.df.unpersist()
+            self._cache = None
+
+    def _snapshot_key(self) -> tuple[int, tuple[str, ...]]:
+        version = self._current_version()
+        return version, tuple(sorted(
+            name for name in os.listdir(self._snapshot_dir(version))
+            if name.startswith("part-")
+        ))
+
+    def _snapshot(self) -> _Snapshot:
+        """The cached current snapshot, refilled when its key moved.
+
+        The key is (current version, sorted part-file names): the version
+        alone misses appends, which land in the current version's dir.
+        Checking it costs one pointer read and one ``listdir``.  The cache
+        reads the part files BY NAME, so its plan never equals a plain read
+        of the dir — Spark's cache manager substitutes cached data for any
+        equal plan, and a dir read must not be served rows of an older
+        file set.  One job fills the cache and yields its count: an
+        ``observe`` over a ``noop`` write (a global ``agg`` would cost three
+        jobs under AQE — cache stage, shuffle map stage, result).
+        """
+        key = self._snapshot_key()
+        if self._cache is None or self._cache.key != key:
+            self._invalidate_cache()
+            version, parts = key
+            snap = self._snapshot_dir(version)
+            df = self.spark.read.schema(VECTOR_SCHEMA).parquet(
+                *(os.path.join(snap, name) for name in parts)
+            ).cache()
+            obs = Observation()
+            df.observe(obs, F.count(F.lit(1)).alias("n")) \
+                .write.format("noop").mode("overwrite").save()
+            self._cache = _Snapshot(key, df, obs.get["n"])
+        return self._cache
 
     # -- DataFrame layer ---------------------------------------------------
 
@@ -269,17 +325,15 @@ class VectorStore:
         return removed
 
     def index_df(self) -> DataFrame:
-        """Cached (id, vec) projection — the analog of the reference's
-        in-memory NumPy index (vector_store.py:64-67)."""
-        if self._cached_index is None:
-            self._cached_index = self.df().select("id", "vec").cache()
-        return self._cached_index
+        """(id, vec) projection of the cached snapshot — the analog of the
+        reference's in-memory NumPy index (vector_store.py:64-67)."""
+        return self._snapshot().df.select("id", "vec")
 
     # -- reference API -----------------------------------------------------
 
     def count(self) -> int:
         # vector_store.py:139-142
-        return self.df().count()
+        return self._snapshot().n
 
     def head(self, n: int = 5) -> list[dict]:
         # vector_store.py:145-161 — first n rows by id, decoded dicts
@@ -380,51 +434,31 @@ class VectorStore:
         self._write_snapshot(remaining, self._current_version() + 1)
 
     def select_ids(self, ids: list[int]) -> list[SelectRecord]:
-        # vector_store.py:256-273 — WHERE id IN (...) ORDER BY id
+        # vector_store.py:256-273 — WHERE id IN (...) ORDER BY id; the
+        # ORDER BY runs on the collected rows (one job, no sort stage)
         rows = (
-            self.df()
+            self._snapshot().df
             .filter(F.col("id").isin([int(i) for i in ids]))
-            .orderBy("id")
             .collect()
         )
-        return [
-            SelectRecord(r.id, np.asarray(r.vec, dtype=np.float32), _json_parse(r.doc))
-            for r in rows
-        ]
+        return _select_records(rows)
 
     def search(self, query: Any, k: int) -> list[list[SearchRecord]]:
         # vector_store.py:275-332 — exact L2 kNN; k > N raises; per-query
-        # ascending distance, tie-break (distance, id).
-        n = self.count()
-        if n == 0:
+        # ascending distance, tie-break (distance, id).  One Spark job over
+        # the cached snapshot; payloads ride along with the winners
+        # (vector_store.py:303-313 fetches them in a second lookup).
+        snap = self._snapshot()
+        if snap.n == 0:
             return []
-        if k > n:
+        if k > snap.n:
             raise ValueError(
-                f"k ({k}) must not exceed the number of stored vectors ({n})"
+                f"k ({k}) must not exceed the number of stored vectors "
+                f"({snap.n})"
             )
         qvecs = _float32_row_vecs(query, self.dim)
-        queries = self.spark.createDataFrame(
-            [(i, [float(x) for x in q]) for i, q in enumerate(qvecs)],
-            "query_id long, qvec array<float>",
-        )
-        hits = knn_search(self.index_df(), queries, k, impl="expr")
-        # late materialization of doc payloads (vector_store.py:303-313):
-        # dedup'd by the join itself
-        full = hits.join(self.df().select("id", "vec", "doc"), "id", "left")
-        rows = full.select("query_id", "id", "vec", "doc", "distance").collect()
-        out: dict[int, list[SearchRecord]] = {i: [] for i in range(len(qvecs))}
-        for r in rows:
-            out[r.query_id].append(
-                SearchRecord(
-                    r.id,
-                    np.asarray(r.vec, dtype=np.float32),
-                    _json_parse(r.doc),
-                    float(r.distance),
-                )
-            )
-        for recs in out.values():
-            recs.sort(key=lambda r: (r.distance, r.id))
-        return [out[i] for i in range(len(qvecs))]
+        return [_search_records(hits)
+                for hits in knn_search_collect(snap.df, qvecs, k)]
 
     def query_by_doc(
         self, path: list[str], values: list[str | int]
@@ -432,11 +466,7 @@ class VectorStore:
         # vector_store.py:334-356 — json_extract(doc, '$.path') IN (values)
         from .functions.jsonfn import query_by_doc as qbd
 
-        rows = qbd(self.df(), path, values).orderBy("id").collect()
-        return [
-            SelectRecord(r.id, np.asarray(r.vec, dtype=np.float32), _json_parse(r.doc))
-            for r in rows
-        ]
+        return _select_records(qbd(self._snapshot().df, path, values).collect())
 
     def search_by_doc(
         self, query_docs: list[str | dict], k: int
@@ -451,21 +481,11 @@ class VectorStore:
         normalized = [
             _json_dump(q) if isinstance(q, dict) else str(q) for q in query_docs
         ]
-        hits = fuzzy_search_by_doc(self.df(), normalized, k)
-        rows = hits.collect()
-        out: dict[int, list[SearchRecord]] = {i: [] for i in range(len(normalized))}
-        for r in rows:
-            out[r.query_id].append(
-                SearchRecord(
-                    r.id,
-                    np.asarray(r.vec, dtype=np.float32),
-                    _json_parse(r.doc),
-                    float(r.distance),
-                )
-            )
-        for recs in out.values():
-            recs.sort(key=lambda r: (r.distance, r.id))
-        return [out[i] for i in range(len(normalized))]
+        hits = fuzzy_search_by_doc(self._snapshot().df, normalized, k)
+        out: list[list] = [[] for _ in normalized]
+        for r in hits.collect():
+            out[r.query_id].append(r)
+        return [_search_records(rs) for rs in out]
 
     def dump_vecs(self) -> np.ndarray:
         # vector_store.py:403-404 — full (n, dim) matrix in id order
@@ -476,6 +496,25 @@ class VectorStore:
 
     def __repr__(self) -> str:
         return f"VectorStore(root={self.root!r}, dim={self.dim})"
+
+
+def _select_records(rows: list) -> list[SelectRecord]:
+    """Collected (id, vec, doc) rows as SelectRecords in id order."""
+    return [
+        SelectRecord(r.id, np.asarray(r.vec, dtype=np.float32), _json_parse(r.doc))
+        for r in sorted(rows, key=lambda r: r.id)
+    ]
+
+
+def _search_records(rows: list) -> list[SearchRecord]:
+    """One query's hit rows as SearchRecords in (distance, id) order."""
+    recs = [
+        SearchRecord(r.id, np.asarray(r.vec, dtype=np.float32),
+                     _json_parse(r.doc), float(r.distance))
+        for r in rows
+    ]
+    recs.sort(key=lambda r: (r.distance, r.id))
+    return recs
 
 
 # convenience alias mirroring reference internals for tests
