@@ -305,45 +305,32 @@ def test_hybrid_indexed_prunes_partitions(spark, tmp_path):
     assert len(pruned) == 2  # one pruned postings scan per unique term
 
 
-def test_bm25_indexed_pre_r9_store_fallback(spark, tmp_path):
-    """A store saved before the doclens table existed still ranks:
-    lengths fall back to the full postings scan (dl = postings rows per
-    doc — equal on corpora without token-less docs), and append leaves
-    the store doclens-less rather than writing a partial table."""
-    import shutil
+def test_invindex_refuses_other_format_versions(spark, tmp_path):
+    """A store whose meta.json carries format_version 0, or none at all,
+    is refused by load, append and compact with a ValueError naming the
+    path and the expected version — no older layout is half-served."""
+    import json
+    import re
 
-    from vector_db_at_home_spark.operators.invindex import (
-        bm25_search_indexed,
-        invindex_append,
-        invindex_load,
-        invindex_save,
-    )
-    from vector_db_at_home_spark.operators.tfidf import bm25_search
+    from vector_db_at_home_spark.operators import invindex
 
     docs = _corpus(spark)
-    path = str(tmp_path / "inv_prer9")
-    invindex_save(docs.filter("doc_id <= 5"), "text", "doc_id",
-                  path, n_buckets=8)
-    shutil.rmtree(f"{path}/doclens")  # simulate a pre-r9 store
-
-    idx = invindex_load(spark, path)
-    assert idx.doclens is None
-    terms = ["cat", "the", "dog"]
-    expect = bm25_search(docs.filter("doc_id <= 5"), terms,
-                         "text", "doc_id", k=10).collect()
-    assert bm25_search_indexed(idx, terms, k=10).collect() == expect
-
-    # append keeps the store consistently doclens-less
-    invindex_append(spark, path, docs.filter("doc_id > 5"),
-                    "text", "doc_id")
-    import os
-
-    assert not os.path.exists(f"{path}/doclens")
-    expect_all = bm25_search(docs, terms, "text", "doc_id",
-                             k=10).collect()
-    got = bm25_search_indexed(invindex_load(spark, path), terms,
-                              k=10).collect()
-    assert got == expect_all
+    path = str(tmp_path / "inv_version")
+    invindex.invindex_save(docs, "text", "doc_id", path, n_buckets=8)
+    meta = json.loads(spark.read.json(f"{path}/meta.json").first().meta)
+    for version in (0, None):
+        old = {k: v for k, v in meta.items() if k != "format_version"}
+        if version is not None:
+            old["format_version"] = version
+        spark.createDataFrame([(json.dumps(old),)], "meta string") \
+            .coalesce(1).write.mode("overwrite").json(f"{path}/meta.json")
+        want = f"{re.escape(path)}.*expected {invindex.FORMAT_VERSION}"
+        with pytest.raises(ValueError, match=want):
+            invindex.invindex_load(spark, path)
+        with pytest.raises(ValueError, match=want):
+            invindex.invindex_append(spark, path, docs, "text", "doc_id")
+        with pytest.raises(ValueError, match=want):
+            invindex.invindex_compact_saved(spark, path)
 
 
 def test_query_term_normalization_parity(spark, tmp_path):

@@ -20,7 +20,7 @@ import sys
 import time
 
 import numpy as np
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import functions as F
 
 sys.path.insert(0, "/root/repo")
 
@@ -28,12 +28,9 @@ N = int(sys.argv[1]) if len(sys.argv) > 1 else 200_000
 DIM = int(sys.argv[2]) if len(sys.argv) > 2 else 32
 CAP = 8192
 
-spark = (
-    SparkSession.builder.master("local[32]")
-    .config("spark.sql.shuffle.partitions", "32")
-    .config("spark.driver.memory", "48g")
-    .getOrCreate()
-)
+from vector_db_at_home_spark.session import get_spark  # noqa: E402
+
+spark = get_spark("admit_ivf_skew_smoke")
 spark.sparkContext.setLogLevel("ERROR")
 
 from vector_db_at_home_spark.operators.ann import cosine_admit_ivf, ivf_build

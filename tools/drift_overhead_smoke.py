@@ -18,7 +18,6 @@ import tempfile
 import time
 
 import numpy as np
-from pyspark.sql import SparkSession
 
 sys.path.insert(0, "/root/repo")
 
@@ -26,12 +25,9 @@ N = int(sys.argv[1]) if len(sys.argv) > 1 else 200_000
 DIM = 32
 BATCH = 5_000
 
-spark = (
-    SparkSession.builder.master("local[32]")
-    .config("spark.sql.shuffle.partitions", "32")
-    .config("spark.driver.memory", "48g")
-    .getOrCreate()
-)
+from vector_db_at_home_spark.session import get_spark  # noqa: E402
+
+spark = get_spark("drift_overhead_smoke")
 spark.sparkContext.setLogLevel("ERROR")
 
 from vector_db_at_home_spark.operators.ann import ivf_build, ivf_save, \

@@ -21,18 +21,15 @@ import json
 import sys
 import time
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import functions as F
 
 sys.path.insert(0, "/root/repo")
 
 N1 = int(sys.argv[1]) if len(sys.argv) > 1 else 20_000
 
-spark = (
-    SparkSession.builder.master("local[32]")
-    .config("spark.sql.shuffle.partitions", "32")
-    .config("spark.driver.memory", "48g")
-    .getOrCreate()
-)
+from vector_db_at_home_spark.session import get_spark  # noqa: E402
+
+spark = get_spark("maxsim_serving_smoke")
 spark.sparkContext.setLogLevel("ERROR")
 
 from vector_db_at_home_spark.operators.featurize import (

@@ -27,7 +27,9 @@ import time
 sys.path.insert(0, "/root/repo")
 
 import numpy as np
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import functions as F
+
+from vector_db_at_home_spark.session import get_spark
 
 
 def make_corpus(spark, n, dim=64, n_clusters=256, seed=7):
@@ -60,10 +62,7 @@ def cell_profile(spark, df, n_cells):
 
 def main():
     n_base = int(sys.argv[1]) if len(sys.argv) > 1 else 50_000
-    spark = (SparkSession.builder.master("local[32]")
-             .config("spark.sql.shuffle.partitions", "32")
-             .config("spark.driver.memory", "24g")
-             .getOrCreate())
+    spark = get_spark("semdedup_autoscale_smoke")
     spark.sparkContext.setLogLevel("ERROR")
     for n in (n_base, 10 * n_base):
         df = make_corpus(spark, n)

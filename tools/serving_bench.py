@@ -20,8 +20,6 @@ r12 adds the round's serving capabilities as first-class legs:
   batch-query forms — one plan per query SET; the companion
   ``*_batch_speedup_x`` fields record batched wall vs (n × the
   single-query wall), the amortization a query batch exists to buy;
-- ``bm25_wand``: Block-Max WAND through the same store (block_size=64
-  so the seed→threshold→prune path runs at this scale);
 - ``maxsim_pruned`` / ``maxsim_pruned_bounded``: the PLAID-style
   cell-gated serve (exact 0-gate; bounded top-2-cells-per-term).
 
@@ -96,8 +94,7 @@ def main() -> None:
 
         def build_inv():
             invindex_save(docs.filter(F.col("doc_id") % 7 != 0),
-                          "text", "doc_id", inv, n_buckets=32,
-                          block_size=64)
+                          "text", "doc_id", inv, n_buckets=32)
             invindex_append(spark, inv,
                             docs.filter(F.col("doc_id") % 7 == 0),
                             "text", "doc_id")
@@ -111,10 +108,9 @@ def main() -> None:
               lambda: phrase_search_indexed(idx, phrase).collect(),
               reps=3)
 
-        # --- r12 batch + WAND legs over the same store ----------------
+        # --- r12 batch legs over the same store -----------------------
         from vector_db_at_home_spark.operators.invindex import (
             bm25_search_indexed_batch,
-            bm25_search_indexed_wand,
             phrase_search_indexed_batch,
         )
 
@@ -134,10 +130,6 @@ def main() -> None:
         timed("phrase_batch16_serve_s",
               lambda: phrase_search_indexed_batch(idx, pqdf).collect(),
               reps=3)
-        timed("bm25_wand_serve_s",
-              lambda: bm25_search_indexed_wand(idx, terms, k=10,
-                                               theta_blocks=16)
-              .collect(), reps=3)
         from vector_db_at_home_spark.operators.hybrid import (
             hybrid_search_rrf_indexed,
             hybrid_search_rrf_indexed_batch,

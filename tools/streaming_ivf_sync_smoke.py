@@ -38,7 +38,6 @@ import tempfile
 import time
 
 import numpy as np
-from pyspark.sql import SparkSession
 
 sys.path.insert(0, "/root/repo")
 
@@ -46,12 +45,9 @@ N = int(sys.argv[1]) if len(sys.argv) > 1 else 400_000
 BATCH = int(sys.argv[2]) if len(sys.argv) > 2 else 20_000
 DIM = int(sys.argv[3]) if len(sys.argv) > 3 else 32
 
-spark = (
-    SparkSession.builder.master("local[32]")
-    .config("spark.sql.shuffle.partitions", "32")
-    .config("spark.driver.memory", "48g")
-    .getOrCreate()
-)
+from vector_db_at_home_spark.session import get_spark  # noqa: E402
+
+spark = get_spark("streaming_ivf_sync_smoke")
 spark.sparkContext.setLogLevel("ERROR")
 
 from vector_db_at_home_spark.operators.ann import (  # noqa: E402

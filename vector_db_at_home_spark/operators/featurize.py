@@ -978,7 +978,7 @@ def maxsim_index_compact_saved(spark, path: str,
         # cell-layer rewrites run FIRST: cellstats' plan reads the
         # tokvecs/tokcells dirs lazily, so it must execute before those
         # tables' own swaps rename the source files away (the invindex
-        # blockmax rule)
+        # dlstats rule)
         clean_tc = idx.tokcells.dropDuplicates(["tok"])
         rewrites += [
             ("cellstats",

@@ -135,30 +135,26 @@ GROUP BY m.id ORDER BY m.id
 # --------------------------------------------------------------------------
 
 
+#: Written into ``meta.json`` by :func:`invindex_save`; a store carrying
+#: any other (or no) version is refused at load instead of half-served.
+FORMAT_VERSION = 1
+
+
 @dataclass
 class InvIndex:
     postings: "DataFrame"   # (term, id, pos, bucket) — bucket-partitioned
     docids: "DataFrame"     # (id) — the append replay guard
-    n_buckets: int
-    tokenize_mode: str = "space"   # pinned at save; appends/queries follow
-    doclens: "DataFrame | None" = None   # (id, dl) — BM25 lengths (r9)
-    # Block-max metadata for top-k-safe postings skipping (r12, VERDICT
-    # r11 task 2): per (term, doc-id block) the posting count, max tf
-    # and min dl — enough to upper-bound any doc's BM25 contribution in
-    # the block under the CURRENT corpus stats.  ``gen`` rows are
-    # per-save/append partials (summed/max'd/min'd at read); pre-r12
-    # stores have none and the WAND path falls back to the full read.
-    blockmax: "DataFrame | None" = None  # (term, blk, gen, cnt, max_tf,
-    #                                       min_dl, bucket)
-    block_size: int = 0
-    has_tombstones: bool = False   # pending deletes → WAND falls back
+    doclens: "DataFrame"    # (id, dl) — BM25 lengths
     # (gen, n_docs, total_toks) — one EXACT partial per save/append
     # batch (disjoint id sets, so their sums are the corpus scalars);
     # O(#gens) rows, so serving reads these instead of aggregating the
-    # whole doclens table per query (r12).  Pending tombstones invalidate
-    # the totals → consumers fall back to the doclens aggregate; compact
+    # whole doclens table per query.  Pending tombstones invalidate the
+    # totals → consumers fall back to the doclens aggregate; compact
     # rewrites one folded gen.
-    dlstats: "DataFrame | None" = None
+    dlstats: "DataFrame"
+    n_buckets: int
+    tokenize_mode: str = "space"   # pinned at save; appends/queries follow
+    has_tombstones: bool = False   # pending deletes → dlstats totals stale
 
 
 def _bucket(col, n_buckets: int):
@@ -192,16 +188,12 @@ def _dlstats_row(dl: DataFrame, gen: str) -> DataFrame:
 
 def _dl_stats_frame(idx: "InvIndex", dl: DataFrame) -> DataFrame:
     """The 1-row corpus scalars (n_docs, total_toks) for BM25 — from the
-    O(#gens) dlstats table when the store carries one and no tombstones
-    are pending (identical values by construction: exact per-batch
-    partials over disjoint id sets), else the full doclens aggregate.
-    At corpus scale this turns a per-query full-table aggregate into a
-    read of a few metadata rows (r12, guide §1.2)."""
-    if (idx.dlstats is not None and idx.doclens is not None
-            and not idx.has_tombstones):
-        # dlstats describes the doclens table: without it (pre-r9
-        # degraded mode derives dl from postings, dropping token-less
-        # docs) the totals would disagree with the dl frame in use
+    O(#gens) dlstats table when no tombstones are pending (identical
+    values by construction: exact per-batch partials over disjoint id
+    sets), else the full doclens aggregate.  At corpus scale this turns
+    a per-query full-table aggregate into a read of a few metadata rows
+    (r12, guide §1.2)."""
+    if not idx.has_tombstones:
         return idx.dlstats.dropDuplicates().agg(
             F.coalesce(F.sum("n_docs").cast("long"), F.lit(0))
             .alias("n_docs"),
@@ -214,48 +206,20 @@ def _dl_stats_frame(idx: "InvIndex", dl: DataFrame) -> DataFrame:
     )
 
 
-def _blockmax_rows(postings: DataFrame, doclens: DataFrame,
-                   block_size: int, gen: str) -> DataFrame:
-    """Per-(term, doc-id block) bounds from a postings batch: posting-doc
-    count (summing these over gens = EXACT df, since save/append batches
-    carry disjoint id sets), max per-doc tf, min dl — the block-max
-    triple that upper-bounds any block doc's BM25 contribution (the
-    saturation term rises with tf and falls with dl, for ANY current
-    corpus stats).  ``gen`` is a batch-deterministic tag so crash-replay
-    rewrites produce byte-identical rows that a dropDuplicates collapses
-    without double-counting df."""
-    tf = postings.groupBy("term", "bucket", "id").agg(
-        F.count(F.lit(1)).cast("long").alias("tf"))
-    return (
-        tf.join(doclens, "id")
-        .withColumn("blk", F.floor(F.col("id") / block_size).cast("long"))
-        .groupBy("term", "bucket", "blk")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("cnt"),
-            F.max("tf").alias("max_tf"),
-            F.min("dl").alias("min_dl"),
-        )
-        .select("term", "blk", F.lit(gen).alias("gen"),
-                "cnt", "max_tf", "min_dl", "bucket")
-    )
-
-
 def invindex_save(docs: DataFrame, text_col: str, id_col: str,
                   path: str, n_buckets: int = 64,
-                  tokenize_mode: str = "space",
-                  block_size: int = 4096) -> None:
+                  tokenize_mode: str = "space") -> None:
     """Persist the positional index: ``{path}/postings`` partitioned by
     ``bucket = pmod(xxhash64(term), n_buckets)`` — a term lookup then
     prunes to ONE parquet partition via Catalyst's constant-folded
     ``bucket = N`` literal — plus ``{path}/docids`` (the indexed-id
     table the append replay guard anti-joins), ``{path}/doclens`` (BM25
-    lengths), ``{path}/blockmax`` (r12: per-(term, id-block) df/tf/dl
-    bounds for the top-k-safe WAND skip — see
-    :func:`bm25_search_indexed_wand`) and ``{path}/meta.json``
-    (n_buckets/block_size, enforced at read).  Postings sort within
+    lengths), ``{path}/dlstats`` (per-batch corpus scalars) and
+    ``{path}/meta.json`` (n_buckets, tokenize_mode and
+    :data:`FORMAT_VERSION`, checked at load).  Postings sort within
     partitions by ``(term, id)`` so the parquet row-group min/max stats
-    carry tight term AND id ranges — the WAND path's literal id-range
-    predicate then skips row groups physically, not just rows."""
+    carry tight term ranges — the pushed ``term = t`` / ``term IN (…)``
+    filters then skip row groups physically, not just rows."""
     import json
 
     spark = docs.sparkSession
@@ -271,74 +235,63 @@ def invindex_save(docs: DataFrame, text_col: str, id_col: str,
     dl.write.mode("overwrite").parquet(f"{path}/doclens")
     _dlstats_row(dl, "g0").write.mode("overwrite") \
         .parquet(f"{path}/dlstats")
-    _blockmax_rows(p, dl, block_size, "g0") \
-        .repartition(8, "bucket").write.partitionBy("bucket") \
-        .mode("overwrite").parquet(f"{path}/blockmax")
     docs.select(F.col(id_col).alias("id")).distinct() \
         .write.mode("overwrite").parquet(f"{path}/docids")
     spark.createDataFrame(
         [(json.dumps({"n_buckets": n_buckets,
                       "tokenize_mode": tokenize_mode,
-                      "block_size": block_size}),)],
+                      "format_version": FORMAT_VERSION}),)],
         "meta string",
     ).coalesce(1).write.mode("overwrite").json(f"{path}/meta.json")
 
 
 def invindex_load(spark, path: str) -> InvIndex:
-    """Reopen a saved index as its live view: crash recovery first (the
-    ``recover_compact_crash`` rule every ``*_load`` follows), tombstones
-    anti-joined at the postings and docids scans.  Pending append
-    duplicates (the crash-torn replay window, see ``invindex_append``)
-    are NOT folded here — the term-filtered search path dedups its tiny
-    per-term streams, and ``invindex_compact_saved`` removes duplicates
-    physically."""
+    """Reopen a saved index as its live view: the format check, then
+    crash recovery (the ``recover_compact_crash`` rule every ``*_load``
+    follows), tombstones anti-joined at the postings, docids and doclens
+    scans.  A store whose ``meta.json`` carries no or another
+    ``format_version`` raises ``ValueError`` before anything is touched.
+    Pending append duplicates (the crash-torn replay window, see
+    ``invindex_append``) are NOT folded here — the term-filtered search
+    path dedups its tiny per-term streams, and
+    ``invindex_compact_saved`` removes duplicates physically."""
     import json
 
     from ..functions.fsutil import fs_exists
     from .maintenance import recover_compact_crash
 
-    recover_compact_crash(spark, f"{path}/postings")
-    recover_compact_crash(spark, f"{path}/docids")
-    recover_compact_crash(spark, f"{path}/doclens")
-    recover_compact_crash(spark, f"{path}/blockmax")
-    recover_compact_crash(spark, f"{path}/dlstats")
-    recover_compact_crash(spark, f"{path}/tombstones")
     meta = json.loads(spark.read.json(f"{path}/meta.json").first().meta)
-    n_buckets = int(meta["n_buckets"])
-    tokenize_mode = meta.get("tokenize_mode", "space")  # pre-r8 meta
-    block_size = int(meta.get("block_size", 0))         # pre-r12 meta
+    if meta.get("format_version") != FORMAT_VERSION:
+        raise ValueError(
+            f"inverted index at {path} has format_version "
+            f"{meta.get('format_version')!r}, expected {FORMAT_VERSION}; "
+            "rebuild it with invindex_save")
+    for table in ("postings", "docids", "doclens", "dlstats", "tombstones"):
+        recover_compact_crash(spark, f"{path}/{table}")
     # explicit schemas: a store saved from an EMPTY corpus (the
     # streaming-ingest bootstrap) has no part files to infer from
     postings = spark.read.schema("term string, id long, pos int, "
                                  "bucket int").parquet(f"{path}/postings")
     docids = spark.read.schema("id long").parquet(f"{path}/docids")
-    doclens = (spark.read.schema("id long, dl long")
-               .parquet(f"{path}/doclens")
-               if fs_exists(spark, f"{path}/doclens") else None)  # pre-r9
-    blockmax = (spark.read.schema(
-        "term string, blk long, gen string, cnt long, max_tf long, "
-        "min_dl long, bucket int").parquet(f"{path}/blockmax")
-        if block_size and fs_exists(spark, f"{path}/blockmax")
-        else None)                                      # pre-r12
-    dlstats = (spark.read.schema("gen string, n_docs long, "
-                                 "total_toks long")
-               .parquet(f"{path}/dlstats")
-               if fs_exists(spark, f"{path}/dlstats") else None)  # pre-r12
+    doclens = spark.read.schema("id long, dl long") \
+        .parquet(f"{path}/doclens")
+    dlstats = spark.read.schema("gen string, n_docs long, "
+                                "total_toks long").parquet(f"{path}/dlstats")
     tomb = f"{path}/tombstones"
     has_tombstones = False
     if fs_exists(spark, tomb):
         dead = spark.read.parquet(tomb).select("id")
         # the anti-join may be vacuous (resurrections emptied the
-        # table); only a NON-EMPTY pending set forces the WAND fallback
+        # table); only a NON-EMPTY pending set makes the dlstats
+        # totals stale
         has_tombstones = not dead.isEmpty()
         postings = postings.join(dead, "id", "left_anti")
         docids = docids.join(dead, "id", "left_anti")
-        if doclens is not None:
-            doclens = doclens.join(dead, "id", "left_anti")
-    return InvIndex(postings=postings, docids=docids, n_buckets=n_buckets,
-                    tokenize_mode=tokenize_mode, doclens=doclens,
-                    blockmax=blockmax, block_size=block_size,
-                    has_tombstones=has_tombstones, dlstats=dlstats)
+        doclens = doclens.join(dead, "id", "left_anti")
+    return InvIndex(postings=postings, docids=docids, doclens=doclens,
+                    dlstats=dlstats, n_buckets=int(meta["n_buckets"]),
+                    tokenize_mode=meta["tokenize_mode"],
+                    has_tombstones=has_tombstones)
 
 
 def invindex_append(spark, path: str, docs: DataFrame, text_col: str,
@@ -386,33 +339,18 @@ def invindex_append(spark, path: str, docs: DataFrame, text_col: str,
         .sortWithinPartitions("term", "id") \
         .write.partitionBy("bucket") \
         .mode("append").parquet(f"{path}/postings")
-    if idx.doclens is not None:  # pre-r9 stores stay doclens-less
-        from ..functions.fsutil import fs_exists
-
-        dl = _doclens(fresh, "__text", "id", idx.tokenize_mode)
-        dl.write.mode("append").parquet(f"{path}/doclens")
-        if fs_exists(spark, f"{path}/dlstats"):
-            # same gen determinism as blockmax below: docids counts the
-            # state BEFORE this batch commits, so a crash replay rewrites
-            # a byte-identical row the read-side dropDuplicates collapses
-            n_prior_dl = spark.read.schema("id long") \
-                .parquet(f"{path}/docids").count()
-            _dlstats_row(dl, f"g{n_prior_dl}").write.mode("append") \
-                .parquet(f"{path}/dlstats")
-        if idx.blockmax is not None:  # pre-r12 stores stay blockmax-less
-            # gen = docids count BEFORE this batch commits: deterministic
-            # across crash replays (docids writes LAST, so a replayed
-            # attempt sees the same count and rewrites byte-identical
-            # rows the read-side dropDuplicates collapses — df never
-            # double-counts), strictly increasing across committed
-            # appends (fresh > 0 here), so distinct batches never share
-            # a gen.
-            n_prior = spark.read.schema("id long") \
-                .parquet(f"{path}/docids").count()
-            gen = f"g{n_prior}"
-            _blockmax_rows(p, dl, idx.block_size, gen) \
-                .repartition(8, "bucket").write.partitionBy("bucket") \
-                .mode("append").parquet(f"{path}/blockmax")
+    dl = _doclens(fresh, "__text", "id", idx.tokenize_mode)
+    dl.write.mode("append").parquet(f"{path}/doclens")
+    # gen = docids count BEFORE this batch commits: deterministic across
+    # crash replays (docids writes LAST, so a replayed attempt sees the
+    # same count and rewrites a byte-identical row the read-side
+    # dropDuplicates collapses — totals never double-count), strictly
+    # increasing across committed appends (fresh > 0 here), so distinct
+    # batches never share a gen.
+    n_prior = spark.read.schema("id long") \
+        .parquet(f"{path}/docids").count()
+    _dlstats_row(dl, f"g{n_prior}").write.mode("append") \
+        .parquet(f"{path}/dlstats")
     fresh.select("id").write.mode("append").parquet(f"{path}/docids")
     return n
 
@@ -441,39 +379,20 @@ def invindex_compact_saved(spark, path: str,
 
     idx = invindex_load(spark, path)  # load IS the recovery point
     clean_posts = idx.postings.dropDuplicates(["term", "id", "pos"])
-    rewrites = []
-    if idx.doclens is not None and idx.blockmax is not None:
-        # recompute from the tombstone-folded postings under ONE fresh
-        # gen — folds deletes out of the df/tf/dl bounds and makes a
-        # tombstoned store WAND-servable again.  MUST rewrite FIRST:
-        # its plan reads the postings/doclens dirs lazily, so it has to
-        # execute before those tables' swaps rename the source files
-        # away (a crash between its swap and theirs leaves folded
-        # bounds over unfolded postings — safe, because the pending
-        # tombstones keep has_tombstones set and WAND falls back until
-        # compaction reruns).
-        rewrites.append((
-            "blockmax",
-            _blockmax_rows(clean_posts, idx.doclens.distinct(),
-                           idx.block_size, "g0").repartition(8, "bucket"),
-            "bucket"))
-    rewrites += [
+    clean_dl = idx.doclens.distinct()
+    rewrites = [
         ("postings",
          clean_posts.repartition(target_partitions, "bucket")
          .sortWithinPartitions("term", "id"),
          "bucket"),
         ("docids", idx.docids.distinct().repartition(8), None),
+        # one folded gen from the tombstone-filtered doclens.  MUST
+        # rewrite before doclens: its plan reads the doclens dir lazily,
+        # so it has to execute before that table's swap renames the
+        # source files away
+        ("dlstats", _dlstats_row(clean_dl, "g0"), None),
+        ("doclens", clean_dl.repartition(8), None),
     ]
-    if idx.doclens is not None:
-        if fs_exists(spark, f"{path}/dlstats"):
-            # one folded gen from the tombstone-filtered doclens; like
-            # blockmax, staged BEFORE the doclens swap renames its
-            # source files away
-            rewrites.append(
-                ("dlstats",
-                 _dlstats_row(idx.doclens.distinct(), "g0"), None))
-        rewrites.append(
-            ("doclens", idx.doclens.distinct().repartition(8), None))
     for name, df, part_col in rewrites:
         table_dir = f"{path}/{name}"
         stage = f"{path}/_compact_{name}"
@@ -568,271 +487,6 @@ def _pruned_union_postings(idx: InvIndex, uniq: list[str]) -> DataFrame:
     )
 
 
-_WAND_THETA_BLOCKS = 8       # blocks exactly scored to seed the bound —
-#   any seed subset yields a VALID θ (the k-th seed score lower-bounds
-#   the final k-th), so the default only trades seed-read bytes against
-#   survivor count.  64 read theta×block_size ≈ 262k doc ids (95% of the
-#   1M-smoke query postings) to seed a k=10 threshold; 8 reads ~33k and
-#   the smoke's survivor set is unchanged (r12 profile)
-_WAND_MAX_RANGES = 4096      # survivor ceiling for the literal id pred
-_WAND_MAX_DRIVER_TB = 1_000_000   # (term, blk) metadata rows collected to
-#   drive the block math (~50 MB of Rows at the cap); a query whose terms
-#   touch more blocks falls back to the full pruned read (r12)
-
-
-def _bm25_pruned_tf(idx: InvIndex, uniq: list[str],
-                    id_pred) -> DataFrame:
-    """Exact per-(term, doc) tf from ONE pruned postings read (bucket
-    IN + term IN literals, optionally narrowed by a literal id-range
-    predicate that parquet row-group min/max stats can skip on — the
-    postings sort by (term, id) within buckets at save/append/compact
-    for exactly this).  Crash-window duplicates collapse at the
-    (term, id, pos) distinct."""
-    posts = _pruned_union_postings(idx, uniq)
-    if id_pred is not None:
-        posts = posts.filter(id_pred)
-    return (
-        posts.select("term", "id", "pos")
-        .distinct()
-        .groupBy("term", "id")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .select(F.col("term").alias("t"), "id", "tf")
-    )
-
-
-def bm25_search_indexed_wand(idx: InvIndex, terms: list[str],
-                             k: int = 10,
-                             theta_blocks: int = _WAND_THETA_BLOCKS,
-                             max_ranges: int = _WAND_MAX_RANGES,
-                             counters: dict | None = None
-                             ) -> DataFrame:
-    """BM25 top-k with Block-Max postings skipping (Ding & Suel 2011's
-    Block-Max WAND, re-expressed set-based for a distributed engine —
-    r12, VERDICT r11 task 2), BIT-IDENTICAL to
-    :func:`bm25_search_indexed` by construction: top-k-safe pruning is
-    EXACT, so the same oracle applies unchanged.
-
-    Why: the plain indexed serve reads EVERY posting of each query term
-    — at corpus scale a common term's postings list IS a scan.  Here
-    postings are skipped whenever their doc-id block provably cannot
-    reach the current top-k:
-
-    1. the tiny ``blockmax`` table (written at save/append, recomputed
-       at compact) gives, per (term, doc-id block), the posting count,
-       max tf and min dl — the BM25 saturation term rises with tf and
-       falls with dl, so ``c(max_tf, min_dl)`` bounds every block doc's
-       per-term contribution under the CURRENT corpus stats, and the
-       per-term counts sum to the EXACT df (batches carry disjoint ids);
-    2. a block's score bound is the multiplicity-weighted sum of its
-       per-term bounds, inflated by 1e-9 relative before the e4 floor —
-       the inflation dominates the double-rounding noise of the bound
-       arithmetic (≤ ~q·1.1e-16 relative for q terms), so
-       ``ub_e4(blk) ≥ score_e4(d)`` for every doc d in blk, RIGOROUSLY;
-    3. the ``theta_blocks`` highest-bound blocks are scored exactly
-       (blocks partition doc ids, so a block read yields COMPLETE
-       per-doc tf); the k-th best score seeds the threshold θ_e4 —
-       a lower bound on the final k-th score, since adding docs can
-       only raise it;
-    4. every block with ``ub_e4 < θ_e4`` is pruned: its docs score
-       strictly below the k-th result, so they cannot enter the top-k
-       even via the id tiebreak.  Survivors coalesce into literal
-       id-range predicates that parquet row-group stats skip
-       physically; the exact scoring tail is the shared
-       ``tfidf.bm25_rank`` with the exact df INJECTED from the
-       metadata (the pruned tf stream no longer sees every doc).
-
-    Fallbacks keep the function total and exact: pre-r12 stores (no
-    blockmax), pre-r9 stores (no doclens), pending tombstones (bounds
-    would overcount deleted docs — compaction restores service), or a
-    survivor set wider than ``max_ranges`` (the adversarial
-    every-block-matters corpus) each degrade to the full pruned read —
-    exactly :func:`bm25_search_indexed`'s plan, never a wrong answer.
-
-    Driver-side state is bounded: the per-(term, block) metadata rows
-    (≤ ``_WAND_MAX_DRIVER_TB``, past which the full pruned read serves)
-    + k seed scores — collected ONCE so the seeding / threshold /
-    survivor selection runs as driver math instead of ~40 tiny AQE
-    stages per serve (r12; profiled at 1M docs: 15.3 s → the pruning
-    overhead swamped the full 4.3 s read it skips).
-
-    ``counters`` (optional dict) receives observability fields the
-    pruning smoke/tests assert on: ``n_blocks`` (blocks holding any
-    query-term posting), ``n_survivors``, ``cnt_total``/``cnt_survivors``
-    (query-term posting-doc counts — the skipped-read proxy), and
-    ``fallback`` (None, or why the full read served)."""
-    from .tfidf import bm25_rank
-
-    from ..functions.tokenize import normalize_query_terms
-
-    def note(**kw):
-        if counters is not None:
-            counters.update(kw)
-
-    lterms = normalize_query_terms(terms, idx.tokenize_mode)
-    if not lterms:
-        raise ValueError("bm25_search_indexed_wand requires query terms")
-    if (idx.blockmax is None or idx.doclens is None
-            or idx.has_tombstones or idx.block_size <= 0):
-        note(fallback="no_blockmax" if idx.blockmax is None
-             or idx.block_size <= 0 else
-             ("tombstones" if idx.has_tombstones else "no_doclens"))
-        return bm25_search_indexed(idx, lterms, k)
-
-    uniq = list(dict.fromkeys(lterms))
-    spark = idx.postings.sparkSession
-    bs = idx.block_size
-    bmap = _term_buckets(spark, uniq, idx.n_buckets)
-    bm = idx.blockmax.filter(
-        F.col("bucket").isin(sorted(set(bmap.values())))
-        & F.col("term").isin(uniq)
-    ).dropDuplicates()           # crash-replay rows are byte-identical
-    # r12 (guide §1.2 — fix the distributed algorithm first): ONE query's
-    # block-max metadata is (query terms × blocks touched) rows — tiny
-    # next to the postings it prunes.  The r12-initial form expressed the
-    # seeding / threshold / survivor selection as DataFrame plans over
-    # this metadata: ~40 AQE stages and 5 driver round-trips per serve,
-    # profiled at 1M docs as WAND 15.3 s vs 4.3 s for the full pruned
-    # read it was meant to beat.  The metadata collects ONCE
-    # (ceiling-guarded; past the ceiling the full pruned read serves —
-    # exact as every other fallback) and the block math runs on the
-    # driver; the cluster executes only the real reads (seed blocks,
-    # survivor blocks).  Pruning decisions cannot change the RESULT:
-    # safety needs only ub(blk) ≥ every block doc's score, and the 1e-9
-    # relative inflation dominates the ≤ q·2⁻⁵² rounding of this double
-    # math exactly as it did the JVM expressions it replaces.
-    tb_rows = (
-        bm.groupBy("term", "blk").agg(
-            F.sum("cnt").cast("long").alias("cnt"),
-            F.max("max_tf").alias("max_tf"),
-            F.min("min_dl").alias("min_dl"),
-        )
-        .limit(_WAND_MAX_DRIVER_TB + 1)
-        .collect()
-    )
-
-    dl_base = idx.doclens.select("id", "dl")
-    dl = dl_base.distinct()
-    # r12 (guide §1.2/§5): the corpus stats are ONE row — collect them
-    # once and inject the literal instead of re-aggregating the whole
-    # doclens table inside every consumer subtree.  The lazy ``stats``
-    # aggregate appeared in the block-bound plan AND in each of the two
-    # bm25_rank calls (seed pass + final pass), so a 1M-doc serve
-    # scanned doclens ~4× for the same two numbers (wand_smoke r12:
-    # wand 8.0 s vs full 4.6 s — slower than the scan it prunes).
-    # ``_dl_stats_frame`` reads the O(#gens) dlstats partials when the
-    # store carries them (save/append maintain exact per-batch sums), so
-    # even this ONE aggregate stops scaling with the corpus.  Identical
-    # values by construction either way.
-    _st = _dl_stats_frame(idx, dl).first()
-    stats = spark.createDataFrame(
-        [(int(_st.n_docs), int(_st.total_toks or 0))],
-        "n_docs bigint, total_toks bigint",
-    )
-
-    if len(tb_rows) > _WAND_MAX_DRIVER_TB:
-        note(fallback="blockmax_too_wide")
-        # metadata wider than the driver budget (a query whose terms
-        # touch tens of millions of blocks): the plain pruned read is
-        # the same exact result without driver state
-        return bm25_search_indexed(idx, lterms, k)
-    n_docs_v, total_toks_v = int(_st.n_docs), int(_st.total_toks or 0)
-    mult = {t: lterms.count(t) for t in uniq}
-    df_by_term: dict[str, int] = {}
-    for r in tb_rows:
-        df_by_term[r.term] = df_by_term.get(r.term, 0) + int(r.cnt)
-    import math as _math
-
-    ub_by_blk: dict[int, float] = {}
-    cnt_by_blk: dict[int, int] = {}
-    for r in tb_rows:
-        # identical arithmetic to the former JVM expressions: exact
-        # integer numerator/denominator converted to double, one log,
-        # one divide — and identical to the per-doc scoring bound in
-        # bm25_rank with (max_tf, min_dl) substituted for (tf, dl)
-        idf_v = _math.log((2 * n_docs_v + 2) / (2 * df_by_term[r.term] + 1))
-        num_v = float(22 * int(r.max_tf) * total_toks_v)
-        den_v = float(10 * int(r.max_tf) * total_toks_v
-                      + 3 * total_toks_v
-                      + 9 * int(r.min_dl) * n_docs_v)
-        blk = int(r.blk)
-        ub_by_blk[blk] = ub_by_blk.get(blk, 0.0) \
-            + mult[r.term] * (idf_v * num_v) / den_v
-        cnt_by_blk[blk] = cnt_by_blk.get(blk, 0) + int(r.cnt)
-    ub_e4 = {b: int(_math.floor(u * (1.0 + 1e-9) * 1e4 + 0.5))
-             for b, u in ub_by_blk.items()}
-    dfreq = spark.createDataFrame(
-        sorted(df_by_term.items()), "term string, df long")
-
-    def rank(tf, pred=None):
-        # r12: prune the doclens side of the scoring join with the SAME
-        # id-range predicate as the postings read.  bm25_rank inner-joins
-        # tf⋈dl on id and every tf id lies inside the ranges, so rows of
-        # dl outside them can never match — filtering first is
-        # result-identical and turns the doclens leg from a full corpus
-        # scan (+ distinct shuffle) into a block-ranges read that parquet
-        # row-group stats can skip physically (guide §3.2/§6).
-        dlp = dl if pred is None else dl_base.filter(pred).distinct()
-        return bm25_rank(tf, dlp, stats, lterms, k,
-                         dfreq=dfreq.select(F.col("term").alias("t"),
-                                            "df"))
-
-    def blk_runs(blks: list[int]) -> list[list[int]]:
-        runs: list[list[int]] = []
-        for b in sorted(blks):
-            if runs and b == runs[-1][1] + 1:
-                runs[-1][1] = b
-            else:
-                runs.append([b, b])
-        return runs
-
-    def ranges_pred(blks: list[int]):
-        pred = None
-        for lo, hi in blk_runs(blks):
-            p = F.col("id").between(lo * bs, (hi + 1) * bs - 1)
-            pred = p if pred is None else (pred | p)
-        return pred
-
-    if not ub_e4:
-        note(fallback="no_matching_blocks", n_blocks=0)
-        return rank(_bm25_pruned_tf(idx, uniq, None))  # empty result
-    blks_by_bound = sorted(ub_e4, key=lambda b: (-ub_e4[b], b))
-    cnt_total = sum(cnt_by_blk.values())
-    if len(blks_by_bound) <= theta_blocks:
-        # the seed set already covers EVERY block holding a query-term
-        # posting — serve it directly, skipping the threshold and
-        # survivor passes (the small-corpus common case)
-        note(fallback=None, n_blocks=len(blks_by_bound),
-             n_survivors=len(blks_by_bound))
-        pred = ranges_pred(blks_by_bound)
-        return rank(_bm25_pruned_tf(idx, uniq, pred), pred)
-    seed_pred = ranges_pred(blks_by_bound[:theta_blocks])
-    seed_rows = rank(
-        _bm25_pruned_tf(idx, uniq, seed_pred), seed_pred).collect()
-    if len(seed_rows) < k:
-        # fewer than k matches in the highest-bound blocks: no safe
-        # threshold — serve the full pruned read (still exact)
-        note(fallback="seed_underfilled")
-        return rank(_bm25_pruned_tf(idx, uniq, None))
-    theta_e4 = seed_rows[-1].score_e4
-
-    survivors = [b for b in blks_by_bound if ub_e4[b] >= theta_e4]
-    if len(survivors) > max_ranges:
-        note(fallback="too_many_survivors")
-        return rank(_bm25_pruned_tf(idx, uniq, None))
-    # an alternating survivor pattern coalesces poorly: cap the OR
-    # chain so the filter expression stays shallow — past it the full
-    # read is cheaper than a thousand-branch predicate (still exact)
-    if len(blk_runs(survivors)) > 512:
-        note(fallback="too_many_ranges")
-        return rank(_bm25_pruned_tf(idx, uniq, None))
-    note(fallback=None, theta_e4=theta_e4,
-         n_blocks=len(ub_e4), n_survivors=len(survivors),
-         cnt_total=cnt_total,
-         cnt_survivors=sum(cnt_by_blk[b] for b in survivors))
-    surv_pred = ranges_pred(survivors)
-    return rank(_bm25_pruned_tf(idx, uniq, surv_pred), surv_pred)
-
-
 def bm25_search_indexed_batch(idx: InvIndex, queries: DataFrame,
                               k: int = 10) -> DataFrame:
     """Batch-query BM25 through the loaded index (r12, VERDICT r11 task
@@ -876,11 +530,7 @@ def bm25_search_indexed_batch(idx: InvIndex, queries: DataFrame,
         .agg(F.count(F.lit(1)).alias("tf"))
         .select(F.col("term").alias("t"), "id", "tf")
     )
-    if idx.doclens is not None:
-        dl = idx.doclens.select("id", "dl").distinct()
-    else:  # pre-r9 fallback, same caveats as bm25_search_indexed
-        dl = (idx.postings.select("id", "pos").distinct()
-              .groupBy("id").agg(F.count(F.lit(1)).alias("dl")))
+    dl = idx.doclens.select("id", "dl").distinct()
     stats = dl.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("dl").cast("long").alias("total_toks"),
@@ -1011,14 +661,7 @@ def bm25_search_indexed(idx: InvIndex, terms: list[str],
     full-table read is the per-doc long pair, ~1e-4 of the corpus bytes.
     Crash-window append duplicates collapse via the per-term
     ``(id, pos)`` distinct (tf) and the ``(id, dl)`` distinct (lengths)
-    — replayed rows are byte-identical, so both are exact.
-
-    Pre-r9 stores have no doclens table; lengths then fall back to a
-    full postings scan (``dl`` = postings rows per doc — equal for
-    every doc with ≥1 token, but token-LESS docs drop out of n_docs,
-    so idf/avgdl can differ from the corpus scan on corpora with empty
-    documents) and the pruning win is forfeited; re-save to get the
-    table."""
+    — replayed rows are byte-identical, so both are exact."""
     from .tfidf import bm25_rank
 
     from ..functions.tokenize import normalize_query_terms
@@ -1046,10 +689,6 @@ def bm25_search_indexed(idx: InvIndex, terms: list[str],
         )
         tf = s if tf is None else tf.unionByName(s)
 
-    if idx.doclens is not None:
-        dl = idx.doclens.select("id", "dl").distinct()
-    else:  # pre-r9 fallback: dl = total postings rows per doc
-        dl = (idx.postings.select("id", "pos").distinct()
-              .groupBy("id").agg(F.count(F.lit(1)).alias("dl")))
+    dl = idx.doclens.select("id", "dl").distinct()
     stats = _dl_stats_frame(idx, dl)
     return bm25_rank(tf, dl, stats, lterms, k)

@@ -150,23 +150,16 @@ def bm25_search(docs: DataFrame, terms: list[str], text_col: str,
 
 
 def bm25_rank(tf: DataFrame, dl: DataFrame, stats: DataFrame,
-              lterms: list[str], k: int,
-              dfreq: DataFrame | None = None) -> DataFrame:
+              lterms: list[str], k: int) -> DataFrame:
     """The BM25 scoring tail shared by the corpus-scan path above and
     the pruned-index path (``invindex.bm25_search_indexed``): given
     ``tf (id, t, tf)``, ``dl (id, dl)`` and the 1-row ``stats (n_docs,
     total_toks)``, rank with the exact-integer rational + literal-order
     pivot sum + e4 key.  One function so the two paths are
     expression-identical by construction (same doubles, same ties).
-
-    ``dfreq`` (r12): an injected exact ``(t, df)`` frame for callers
-    whose ``tf`` stream is deliberately PARTIAL — the WAND path scores
-    only surviving blocks, so per-term document frequencies must come
-    from the block-max metadata (which sums to the exact df) rather
-    than a count over the pruned stream.  Default None recomputes from
-    ``tf`` as before (the full-stream paths, where the two agree)."""
-    if dfreq is None:
-        dfreq = tf.groupBy("t").agg(F.count(F.lit(1)).alias("df"))
+    ``tf`` must be the FULL stream of every query term: per-term document
+    frequencies are counted from it."""
+    dfreq = tf.groupBy("t").agg(F.count(F.lit(1)).alias("df"))
     scored = (
         tf.join(F.broadcast(dfreq), "t")
         .join(dl, "id")

@@ -1715,16 +1715,11 @@ def q_streaming_window_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .streaming.events import EVENTS_SCHEMA
 
-    # Pin UTC for this query (ADVICE r5): window('ts','1 hour') buckets on
-    # the epoch instant, but date_format renders in the SESSION timezone —
-    # under a non-UTC session the formatted window starts (and, for
-    # fractional-hour zones, the bucket boundaries of the parquet
-    # timestamps as read) diverge from DuckDB's naive date_trunc even
-    # though both engines see identical data.  Restored after the final
-    # select is forced via localCheckpoint, so the pin cannot leak.
-    tz_before = spark.conf.get("spark.sql.session.timeZone", None)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-
+    # Relies on the UTC session timezone get_spark pins: window('ts',
+    # '1 hour') buckets on the epoch instant, but date_format renders in
+    # the SESSION timezone — under a non-UTC session the formatted window
+    # starts (and, for fractional-hour zones, the bucket boundaries)
+    # diverge from DuckDB's naive date_trunc on identical data.
     work = tempfile.mkdtemp(prefix="stream_win_")
     landing, ckpt = f"{work}/landing", f"{work}/ckpt"
     ev = load_table(spark, sf_dir, "events")
@@ -1761,7 +1756,7 @@ def q_streaming_window_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     shutil.rmtree(work, ignore_errors=True)
-    result = (
+    return (
         spark.table(qname)
         .select(
             F.date_format(F.col("win.start"), "yyyy-MM-dd HH:mm:ss")
@@ -1773,15 +1768,6 @@ def q_streaming_window_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("win_start", "event_type")
     )
-    # force the tz-sensitive date_format NOW, under the pinned UTC conf
-    # (the result is calendar-bounded: distinct hours x event types), then
-    # restore the caller's timezone before handing back the lazy frame
-    result = result.localCheckpoint(eager=True)
-    if tz_before is None:
-        spark.conf.unset("spark.sql.session.timeZone")
-    else:
-        spark.conf.set("spark.sql.session.timeZone", tz_before)
-    return result
 
 
 @register(
@@ -5164,8 +5150,7 @@ def _register_batch_serving() -> None:
         (3, ["stream", "window", "dup"]),
     ]
 
-    def _build_invindex(spark: SparkSession, sf_dir: str, prefix: str,
-                        block_size: int = 4096):
+    def _build_invindex(spark: SparkSession, sf_dir: str, prefix: str):
         import tempfile
 
         from .operators.invindex import (
@@ -5177,8 +5162,7 @@ def _register_batch_serving() -> None:
         docs = load_table(spark, sf_dir, "documents")
         path = tempfile.mkdtemp(prefix=prefix)
         invindex_save(docs.filter(F.col("doc_id") % 7 != 0),
-                      "text", "doc_id", path, n_buckets=32,
-                      block_size=block_size)
+                      "text", "doc_id", path, n_buckets=32)
         invindex_append(spark, path,
                         docs.filter(F.col("doc_id") % 7 == 0),
                         "text", "doc_id")
@@ -5207,36 +5191,6 @@ def _register_batch_serving() -> None:
 
     _QUERIES["bm25_topk_batch"] = q_bm25_batch
     _ORACLES["bm25_topk_batch"] = render_bm25_batch_sql(bm25_queries, k=10)
-
-    def q_bm25_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """BM25 top-k with Block-Max WAND postings skipping
-        (operators/invindex.py:bm25_search_indexed_wand — r12, VERDICT
-        r11 task 2): per-(term, id-block) tf/dl bounds from the
-        blockmax table written at save/append, the 64 highest-bound
-        blocks scored exactly to seed the threshold, blocks whose bound
-        cannot reach the k-th score pruned via literal id-range
-        predicates (parquet row-group skips over the (term, id)-sorted
-        postings).  Top-k-safe pruning is EXACT, so the result —
-        scored with the shared bm25_rank tail and the exact df injected
-        from the metadata — is bit-identical to bm25_search_indexed
-        and the oracle is the SAME corpus-scan SQL.  block_size=64 and
-        theta_blocks=4 force a multi-block store AND the full
-        seed→threshold→prune path (not the seed-covers-everything
-        shortcut) at every test scale, so that is what the oracle
-        certifies."""
-        from .operators.invindex import bm25_search_indexed_wand
-
-        idx, path = _build_invindex(spark, sf_dir, "bm25wand_",
-                                    block_size=64)
-        return _finish_rmtree(bm25_search_indexed_wand(
-            idx, ["vector", "merge", "batch"], k=10, theta_blocks=4),
-            path)
-
-    from .operators.tfidf import render_bm25_sql as _bm25_sql
-
-    _QUERIES["bm25_topk_wand"] = q_bm25_wand
-    _ORACLES["bm25_topk_wand"] = _bm25_sql(
-        ["vector", "merge", "batch"], k=10)
 
     def q_phrase_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         """Batch exact phrase search through the persisted positional
@@ -6023,17 +5977,15 @@ _TAIL_ORDER = [
     # (bm25_topk_batch is SCORED; the batch phrase/maxsim entries
     # complete the family — one set-based plan per query batch,
     # per-query rows bit-identical to the single-query serving calls),
-    # Block-Max WAND (bit-identical to the plain indexed serve —
-    # top-k-safe pruning is exact, same corpus-scan oracle), and the
-    # single-query BM25 flagship demoted by the r12 rotation keeps its
-    # full oracle here
+    # and the single-query BM25 flagship demoted by the r12 rotation
+    # keeps its full oracle here
     # plus the bounded-probe regime of the r11 two-tower flagship
     # (n_probes = n_cells/4, exact-leg-hashed + in-plan ≥7/10 recall
     # boolean — the ann_ivf_recall grading pattern)
     # plus PLAID-style centroid-gated MaxSim (provable cell bounds;
     # bit-identical to the full indexed read, same oracle)
-    "phrase_search_batch", "maxsim_topk_batch", "bm25_topk_wand",
-    "bm25_topk_indexed", "hybrid_rrf_two_tower_bounded",
+    "phrase_search_batch", "maxsim_topk_batch", "bm25_topk_indexed",
+    "hybrid_rrf_two_tower_bounded",
     "maxsim_topk_pruned", "maxsim_topk_pruned_bounded",
     "hybrid_rrf_batch",
     # relational shapes demoted in round 4 — each re-walks machinery green
