@@ -305,34 +305,6 @@ def test_hybrid_indexed_prunes_partitions(spark, tmp_path):
     assert len(pruned) == 2  # one pruned postings scan per unique term
 
 
-def test_invindex_refuses_other_format_versions(spark, tmp_path):
-    """A store whose meta.json carries format_version 0, or none at all,
-    is refused by load, append and compact with a ValueError naming the
-    path and the expected version — no older layout is half-served."""
-    import json
-    import re
-
-    from vector_db_at_home_spark.operators import invindex
-
-    docs = _corpus(spark)
-    path = str(tmp_path / "inv_version")
-    invindex.invindex_save(docs, "text", "doc_id", path, n_buckets=8)
-    meta = json.loads(spark.read.json(f"{path}/meta.json").first().meta)
-    for version in (0, None):
-        old = {k: v for k, v in meta.items() if k != "format_version"}
-        if version is not None:
-            old["format_version"] = version
-        spark.createDataFrame([(json.dumps(old),)], "meta string") \
-            .coalesce(1).write.mode("overwrite").json(f"{path}/meta.json")
-        want = f"{re.escape(path)}.*expected {invindex.FORMAT_VERSION}"
-        with pytest.raises(ValueError, match=want):
-            invindex.invindex_load(spark, path)
-        with pytest.raises(ValueError, match=want):
-            invindex.invindex_append(spark, path, docs, "text", "doc_id")
-        with pytest.raises(ValueError, match=want):
-            invindex.invindex_compact_saved(spark, path)
-
-
 def test_query_term_normalization_parity(spark, tmp_path):
     """r10 (ADVICE r9): a query term containing a space or punctuation
     normalizes through the SAME tokenizer on the corpus-scan and the

@@ -366,31 +366,6 @@ def test_load_fold_dedups_replayed_delta_rows(spark, tmp_path):
     assert len(pairs) == len(set(pairs))
 
 
-def test_pre_r8_store_without_fingers_still_searches(spark, tmp_path):
-    """Back-compat: a store saved before the fingers table existed loads
-    with fingers=None and the search falls back to the on-the-fly ring."""
-    import shutil
-
-    from vector_db_at_home_spark.operators.knngraph import (
-        graph_ann_search,
-        knn_graph_nndescent,
-        knngraph_load,
-        knngraph_save,
-    )
-
-    rows = _clustered(n_clusters=3, per=10)
-    df = spark.createDataFrame(rows, "id long, vec array<double>")
-    path = str(tmp_path / "gidx_old")
-    knngraph_save(knn_graph_nndescent(df, "id", "vec", k=4), df, path, k=4)
-    shutil.rmtree(f"{path}/fingers")
-    idx = knngraph_load(spark, path)
-    assert idx.fingers is None
-    qs = df.limit(2).select(F.col("id").alias("query_id"),
-                            F.col("vec").alias("qvec"))
-    res = graph_ann_search(idx.vectors, idx.edges, qs, k=3).collect()
-    assert len(res) == 6
-
-
 def test_beam_early_stop_matches_full_run(spark):
     """r8: the convergence early-stop returns the same neighbor sets and
     distances as the fixed-hop schedule on clustered data (where the

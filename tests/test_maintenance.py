@@ -278,3 +278,126 @@ def test_snapshot_diff_store_time_travel(spark, tmp_path):
                                    "id long, a string, b string")
     assert snapshot_diff(oldsep, newsep, "id", ["a", "b"]).first() \
         .status == "changed"
+
+
+def test_read_meta_starts_no_spark_job(spark, tmp_path, jobs_run):
+    from vector_db_at_home_spark.operators.maintenance import (
+        FORMAT_VERSION,
+        read_meta,
+        write_meta,
+    )
+
+    f = str(tmp_path / "meta.json")
+    write_meta(spark, f, {"k": 3, "mode": "space"})
+    meta, n_jobs = jobs_run(lambda: read_meta(spark, f))
+    assert meta == {"k": 3, "mode": "space",
+                    "format_version": FORMAT_VERSION}
+    assert n_jobs == 0
+    # the counter sees jobs at all: a one-row count runs at least one
+    _, n_control = jobs_run(lambda: spark.range(1).count())
+    assert n_control >= 1
+
+
+_META_FAMILIES = ["invindex", "maxsim", "minhash", "simhash", "substring",
+                  "knngraph"]
+
+
+def _save_family(spark, family, path):
+    """Save a tiny index of ``family`` at ``path``; return its loader."""
+    docs = spark.createDataFrame(
+        [(i, f"alpha beta gamma delta epsilon doc {i} tag{i % 3}")
+         for i in range(8)],
+        "doc_id long, text string",
+    )
+    if family == "invindex":
+        from vector_db_at_home_spark.operators.invindex import (
+            invindex_load,
+            invindex_save,
+        )
+
+        invindex_save(docs, "text", "doc_id", path, n_buckets=4)
+        return lambda: invindex_load(spark, path)
+    if family == "maxsim":
+        from vector_db_at_home_spark.operators.featurize import (
+            maxsim_index_load,
+            maxsim_index_save,
+        )
+
+        maxsim_index_save(docs, "text", "doc_id", path, dim=8, n_buckets=4)
+        return lambda: maxsim_index_load(spark, path)
+    if family == "minhash":
+        from vector_db_at_home_spark.operators.dedup import (
+            _read_minhash_state,
+            minhash_corpus_state_build,
+        )
+
+        minhash_corpus_state_build(docs, path, "text", "doc_id", n=3)
+        return lambda: _read_minhash_state(spark, path)
+    if family == "simhash":
+        from vector_db_at_home_spark.operators.dedup import (
+            simhash_pairs_incremental_prepared,
+            simhash_state_build,
+        )
+
+        simhash_state_build(docs, path, "text", "doc_id")
+        return lambda: simhash_pairs_incremental_prepared(
+            spark, path, docs, "text", "doc_id")
+    if family == "substring":
+        from vector_db_at_home_spark.operators.dedup import (
+            _read_substring_state,
+            substring_state_build,
+        )
+
+        substring_state_build(docs, path, "text", "doc_id", window=4)
+        return lambda: _read_substring_state(spark, path)
+    from vector_db_at_home_spark.operators.knngraph import (
+        knn_graph_nndescent,
+        knngraph_load,
+        knngraph_save,
+    )
+
+    vecs = spark.createDataFrame(
+        [(i, [float(i), float(i % 3)]) for i in range(8)],
+        "id long, vec array<double>",
+    )
+    knngraph_save(knn_graph_nndescent(vecs, "id", "vec", k=2), vecs, path,
+                  k=2)
+    return lambda: knngraph_load(spark, path)
+
+
+@pytest.mark.parametrize("family", _META_FAMILIES)
+def test_loaders_refuse_other_format_versions(spark, tmp_path, family):
+    """Every meta-carrying loader refuses a meta.json with version 1, 0
+    or none, and the older layout where meta.json is a Spark JSON
+    directory, with a ValueError naming the path and the expected
+    version — no older layout is half-served."""
+    import json
+    import re
+
+    from vector_db_at_home_spark.functions.fsutil import (
+        fs_read_text,
+        fs_rmtree,
+        fs_write_text,
+    )
+    from vector_db_at_home_spark.operators.maintenance import FORMAT_VERSION
+
+    path = str(tmp_path / family)
+    load = _save_family(spark, family, path)
+    load()
+    meta_file = f"{path}/meta.json"
+    good = json.loads(fs_read_text(spark, meta_file))
+    assert good["format_version"] == FORMAT_VERSION == 2
+    want = f"{re.escape(path)}.*expected 2"
+    for version in (1, 0, None):
+        bad = {k: v for k, v in good.items() if k != "format_version"}
+        if version is not None:
+            bad["format_version"] = version
+        fs_write_text(spark, meta_file, json.dumps(bad))
+        with pytest.raises(ValueError, match=want):
+            load()
+    fs_rmtree(spark, meta_file)
+    spark.createDataFrame([(json.dumps({**good, "format_version": 1}),)],
+                          "meta string") \
+        .coalesce(1).write.json(meta_file)
+    with pytest.raises(ValueError, match=want):
+        load()

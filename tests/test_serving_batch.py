@@ -33,6 +33,23 @@ def invidx(spark, tmp_path_factory):
 
 
 @pytest.fixture(scope="module")
+def invidx_tomb(spark, tmp_path_factory):
+    """An index with pending tombstones: BM25's corpus scalars then come
+    from the doclens aggregate, not the dlstats partials."""
+    from vector_db_at_home_spark.operators.invindex import (
+        invindex_load,
+        invindex_save,
+    )
+
+    path = str(tmp_path_factory.mktemp("batchserve") / "inv_tomb")
+    docs = _docs(spark)
+    invindex_save(docs, "text", "doc_id", path, n_buckets=16)
+    docs.filter(F.col("doc_id") % 5 == 0).select(F.col("doc_id").alias("id")) \
+        .write.mode("append").parquet(f"{path}/tombstones")
+    return invindex_load(spark, path)
+
+
+@pytest.fixture(scope="module")
 def msidx(spark, tmp_path_factory):
     from vector_db_at_home_spark.operators.featurize import (
         maxsim_index_append,
@@ -57,7 +74,7 @@ BM25_QUERIES = [
 ]
 
 
-def test_bm25_batch_equals_single_calls(spark, invidx):
+def test_bm25_batch_equals_single_calls(spark, invidx, invidx_tomb):
     from vector_db_at_home_spark.operators.invindex import (
         bm25_search_indexed,
         bm25_search_indexed_batch,
@@ -65,13 +82,16 @@ def test_bm25_batch_equals_single_calls(spark, invidx):
 
     qdf = spark.createDataFrame(BM25_QUERIES,
                                 "query_id long, terms array<string>")
-    got = [(r.query_id, r.id, r.score_e4)
-           for r in bm25_search_indexed_batch(invidx, qdf, k=10).collect()]
-    want = []
-    for qid, terms in BM25_QUERIES:
-        for r in bm25_search_indexed(invidx, terms, k=10).collect():
-            want.append((qid, r.id, r.score_e4))
-    assert got == want  # bit-identical scores AND order, per query
+    assert not invidx.has_tombstones and invidx_tomb.has_tombstones
+    for idx in (invidx, invidx_tomb):
+        got = [(r.query_id, r.id, r.score_e4)
+               for r in bm25_search_indexed_batch(idx, qdf, k=10).collect()]
+        want = []
+        for qid, terms in BM25_QUERIES:
+            for r in bm25_search_indexed(idx, terms, k=10).collect():
+                want.append((qid, r.id, r.score_e4))
+        assert got == want  # bit-identical scores AND order, per query
+    assert got and all(i % 5 != 0 for _, i, _ in got)
 
 
 def test_bm25_batch_guards(spark, invidx):

@@ -312,23 +312,7 @@ def test_diff_change_feed(spark, tmp_path):
         == changes
 
 
-def _jobs_run(spark, fn):
-    """(result of ``fn()``, number of Spark jobs it ran)."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"store-jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    # job-start events reach the status tracker through the listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_warm_search_is_one_job_and_count_none(spark, tmp_path):
+def test_warm_search_is_one_job_and_count_none(spark, tmp_path, jobs_run):
     """A warm store answers ``search`` (1 or 16 queries) with one Spark job
     and ``count`` with none: no count job, no broadcast, no shuffle, no
     payload join."""
@@ -338,11 +322,11 @@ def test_warm_search_is_one_job_and_count_none(spark, tmp_path):
               gen_docs(range(200)))
     q16 = rng.standard_normal((16, DIM)).astype(np.float32)
     vs.search(q16[:1], k=5)  # fills the cache
-    res, jobs = _jobs_run(spark, lambda: vs.search(q16[:1], k=5))
+    res, jobs = jobs_run(lambda: vs.search(q16[:1], k=5))
     assert jobs == 1 and len(res) == 1 and len(res[0]) == 5
-    res, jobs = _jobs_run(spark, lambda: vs.search(q16, k=5))
+    res, jobs = jobs_run(lambda: vs.search(q16, k=5))
     assert jobs == 1 and len(res) == 16
-    n, jobs = _jobs_run(spark, vs.count)
+    n, jobs = jobs_run(vs.count)
     assert (n, jobs) == (200, 0)
 
 

@@ -144,8 +144,9 @@ def fs_write_text(spark, path: str, content: str) -> None:
     """Write a small text file ATOMICALLY: content lands at
     ``{path}.tmp`` first, then renames over (readers see the old file,
     the new file, or — in the crash window between delete and rename —
-    no file, never a torn one; callers treat a missing file as
-    no-state)."""
+    no file, never a torn one).  Each reader decides what a missing file
+    means: the IVF sync watermark and drift baseline read it as no
+    state, ``maintenance.read_meta`` refuses the index."""
     tmp = f"{path}.tmp"
     try:
         fs, p = _hadoop_fs(spark, tmp)

@@ -199,9 +199,8 @@ def ivf_save(ivf: IVFIndex, path: str) -> None:
     build's baseline (which could spuriously trigger or suppress
     auto-refit).  The log is cleared BEFORE the baseline lands so a
     stale log can never pair with a fresh baseline either."""
-    import json
-
     from ..functions.fsutil import fs_rmtree
+    from .maintenance import write_meta
 
     spark = ivf.assigned.sparkSession
     mean_dist, n = _assign_dist_agg(ivf.assigned, ivf.centroids)
@@ -216,11 +215,8 @@ def ivf_save(ivf: IVFIndex, path: str) -> None:
     # a save may rewrite the assigned set entirely — the next watermark
     # sync re-derives its bound from the fresh table (one max-id scan)
     fs_rmtree(spark, f"{path}/sync_watermark")
-    spark.createDataFrame(
-        [(json.dumps({"mean_dist": mean_dist, "n": n,
-                      "centroid_sig": sig}),)], "meta string"
-    ).coalesce(1).write.mode("overwrite").json(
-        f"{path}/drift/baseline.json")
+    write_meta(spark, f"{path}/drift/baseline.json",
+               {"mean_dist": mean_dist, "n": n, "centroid_sig": sig})
 
 
 def ivf_load(spark, path: str) -> IVFIndex:
@@ -347,7 +343,8 @@ def ivf_sync_with_store(spark, store, path: str,
     the "refit on the compaction cadence when batch statistics move"
     policy needs to be actionable.  ``ivf_drift_status`` reads the log
     without syncing.  The stat costs one broadcast join + agg over the
-    NEW rows only (pre-r10 stores without a baseline skip it)."""
+    NEW rows only (skipped when the baseline is missing, which happens
+    only after a first ``ivf_save`` torn before its baseline write)."""
     ivf = ivf_load(spark, path)
     new_rows = store.df().select(F.col(id_col).alias("id"),
                                  F.col(vec_col).alias("vec"))
@@ -541,27 +538,25 @@ DRIFT_REFIT_RATIO = 1.5
 
 def _drift_record(spark, path: str, ivf: IVFIndex, fresh: DataFrame,
                   stats: dict | None) -> None:
-    """Append one drift-log row for a synced batch (no-op on a
-    pre-r10 store without a baseline, or when the baseline's
-    ``centroid_sig`` no longer matches the live centroids — the
-    ``ivf_save`` torn-window guard, r11).
+    """Append one drift-log row for a synced batch (no-op when the
+    baseline is missing — a first ``ivf_save`` torn before its baseline
+    write — or when the baseline's ``centroid_sig`` no longer matches
+    the live centroids — the ``ivf_save`` torn-window guard, r11).
 
     A ~0 baseline (k ≈ n builds where every vector sits ON a centroid)
     carries no drift signal: the ratio would be batch_mean/ε and
     ``refit_recommended`` would latch permanently true, rebuilding on
     every batch forever.  Such batches record ``drift_ratio = NaN``
     and never recommend a refit (NaN compares false)."""
-    import json
     import math
 
     from ..functions.fsutil import fs_exists
+    from .maintenance import read_meta
 
     if not fs_exists(spark, f"{path}/drift/baseline.json"):
         return
-    base = json.loads(
-        spark.read.json(f"{path}/drift/baseline.json").first().meta)
-    if ("centroid_sig" in base
-            and int(base["centroid_sig"]) != _centroid_sig(ivf.centroids)):
+    base = read_meta(spark, f"{path}/drift/baseline.json")
+    if int(base["centroid_sig"]) != _centroid_sig(ivf.centroids):
         return  # stale baseline from a torn ivf_save — no signal
     batch_mean, batch_n = _assign_dist_agg(fresh, ivf.centroids)
     base_mean = float(base["mean_dist"])
@@ -595,17 +590,15 @@ def ivf_drift_status(spark, path: str,
     documented response to a recommendation is the existing policy:
     ``ivf_build`` (sampled, bounded cost) + ``ivf_save`` — which
     resets the baseline and clears the log."""
-    import json
-
     from ..functions.fsutil import fs_exists
+    from .maintenance import read_meta
 
     if not fs_exists(spark, f"{path}/drift/baseline.json"):
         return {"baseline": None, "n_batches": 0, "drift_ratio": None,
                 "refit_recommended": False}
-    base = json.loads(
-        spark.read.json(f"{path}/drift/baseline.json").first().meta)
-    if ("centroid_sig" in base and int(base["centroid_sig"])
-            != _centroid_sig(spark.read.parquet(f"{path}/centroids"))):
+    base = read_meta(spark, f"{path}/drift/baseline.json")
+    if int(base["centroid_sig"]) != _centroid_sig(
+            spark.read.parquet(f"{path}/centroids")):
         # torn ivf_save: baseline predates the live centroid table
         return {"baseline": None, "n_batches": 0, "drift_ratio": None,
                 "refit_recommended": False}

@@ -597,9 +597,9 @@ def minhash_corpus_state_build(corpus_df: DataFrame, path: str,
     batch's rows to these tables — no corpus rescan anywhere.  Rebuild
     (re-evaluating caps) on your compaction cadence.
     """
-    import json
-
     from pyspark.sql import Window
+
+    from .maintenance import write_meta
 
     spark = corpus_df.sparkSession
     sh_all = hashed_shingles(corpus_df, text_col, id_col, n, None)
@@ -635,38 +635,26 @@ def minhash_corpus_state_build(corpus_df: DataFrame, path: str,
     band_rows.write.mode("overwrite").parquet(f"{path}/bands")
     sizes.write.mode("overwrite").parquet(f"{path}/sizes")
     sh.select("id", "h60").write.mode("overwrite").parquet(f"{path}/shingles")
-    meta = {"n": n, "num_perm": num_perm, "bands": bands,
-            "max_doc_freq": max_doc_freq, "max_band_bucket": max_band_bucket}
-    spark.createDataFrame([(json.dumps(meta),)], "meta string") \
-        .coalesce(1).write.mode("overwrite").json(f"{path}/meta.json")
+    write_meta(spark, f"{path}/meta.json",
+               {"n": n, "num_perm": num_perm, "bands": bands,
+                "max_doc_freq": max_doc_freq,
+                "max_band_bucket": max_band_bucket})
 
 
-def _recover_compact_crash(spark, path: str) -> None:
-    """Heal the one non-atomic window in ``minhash_corpus_state_compact``:
-    a crash between its two renames leaves a table parked at
-    ``_old_<name>`` with no live ``<name>`` copy (the staged rewrite at
-    ``_compact_<name>`` may or may not exist).  Detect that shape and
-    rename the old table back — the old and staged layouts hold identical
-    content, so either restores the state losslessly (ADVICE r5: without
-    this, a missing ``bands`` table silently triggered a full state
-    rebuild in the streaming screen)."""
-    from ..functions.fsutil import fs_exists, fs_rename, fs_rmtree
-
-    for name in ("shingles", "sizes", "bands"):
-        cur, old = f"{path}/{name}", f"{path}/_old_{name}"
-        if fs_exists(spark, old) and not fs_exists(spark, cur):
-            fs_rename(spark, old, cur)
-            # stale staging from the crashed compact; safe to drop only
-            # when we KNOW the compact died (a live compact never leaves
-            # cur missing) — plain reads must not touch staging dirs
-            fs_rmtree(spark, f"{path}/_compact_{name}")
+#: The appended MinHash state tables ``minhash_corpus_state_compact``
+#: rewrites (``hot`` and the meta are written once, at build).
+_MINHASH_APPENDED = ("shingles", "sizes", "bands")
 
 
 def _read_minhash_state(spark, path: str):
-    import json
+    """(meta, shingles, bands, sizes, hot) of a persisted state, after
+    ``maintenance.recover_compact_crash`` heals each appended table (a
+    crash inside ``minhash_corpus_state_compact``'s swap)."""
+    from .maintenance import read_meta, recover_compact_crash
 
-    _recover_compact_crash(spark, path)
-    meta = json.loads(spark.read.json(f"{path}/meta.json").first().meta)
+    meta = read_meta(spark, f"{path}/meta.json")
+    for name in _MINHASH_APPENDED:
+        recover_compact_crash(spark, f"{path}/{name}")
     return (
         meta,
         spark.read.parquet(f"{path}/shingles"),
@@ -704,12 +692,6 @@ def minhash_lsh_pairs_incremental_prepared(spark, state_path: str,
     bn, _ = _signature_bands(sh_new, meta["num_perm"], meta["bands"],
                              include_sz=True)
     key = _band_key(meta["num_perm"] // meta["bands"])
-    if key[-1] not in cor_bands.columns:
-        raise ValueError(
-            f"persisted MinHash state at {state_path} uses the pre-r6 "
-            "hashed band layout (bhash column); rebuild it with "
-            "minhash_corpus_state_build to the raw-slot layout"
-        )
     candidates = (
         bn.select(F.col("id").alias("new_id"),
                   F.col("sz").alias("sz_a"), *key)
@@ -814,27 +796,17 @@ def minhash_corpus_state_compact(spark, state_path: str,
     per-batch appends (which accumulate small files) and a full
     ``minhash_corpus_state_build`` rebuild (which re-derives shingles and
     re-evaluates the frozen caps).  Pure rewrite: no recompute, hot list
-    and meta untouched, content identical (pytest-pinned).  Each table is
-    staged next to itself and swapped in with two renames.  Crash safety:
-    a crash before the first rename leaves the old layout (stale staging
-    cleaned up next compact); a crash BETWEEN the two renames parks the
-    table at ``_old_<name>`` with no live copy — ``_recover_compact_crash``
-    (run on every state read and at the top of every compact) renames it
-    back, so readers always find a complete state.  All path operations go
-    through the Hadoop FileSystem API so the state may live on HDFS/S3A
-    (``functions.fsutil``)."""
-    from ..functions.fsutil import fs_rename, fs_rmtree
+    and meta untouched, content identical (pytest-pinned).  Each table
+    goes through ``maintenance.replace_table``; ``recover_compact_crash``
+    (run per table on every state read and here) heals both crash
+    windows, so readers always find a complete state."""
+    from .maintenance import recover_compact_crash, replace_table
 
-    _recover_compact_crash(spark, state_path)
-    for name in ("shingles", "sizes", "bands"):
+    for name in _MINHASH_APPENDED:
         cur = f"{state_path}/{name}"
-        stage = f"{state_path}/_compact_{name}"
-        spark.read.parquet(cur).repartition(target_partitions) \
-            .write.mode("overwrite").parquet(stage)
-        old = f"{state_path}/_old_{name}"
-        fs_rename(spark, cur, old)
-        fs_rename(spark, stage, cur)
-        fs_rmtree(spark, old)
+        recover_compact_crash(spark, cur)
+        replace_table(spark, cur, spark.read.parquet(cur)
+                      .repartition(target_partitions).write)
 
 
 def _sql_hashed_shingle_cte(max_doc_freq: int | None, n: int = 3) -> str:
@@ -1145,23 +1117,21 @@ def simhash_state_build(corpus_df: DataFrame, path: str,
     analog of ``minhash_corpus_state_build``, but trivially cheap: the
     state is ONE 16-byte row per doc, fingerprints are per-doc (no frozen
     caps), and append ≡ rebuild exactly."""
-    import json
+    from .maintenance import write_meta
 
     spark = corpus_df.sparkSession
     simhash60(corpus_df, text_col, id_col, n).write.mode("overwrite") \
         .parquet(f"{path}/fingerprints")
-    meta = {"n": n}
-    spark.createDataFrame([(json.dumps(meta),)], "meta string") \
-        .coalesce(1).write.mode("overwrite").json(f"{path}/meta.json")
+    write_meta(spark, f"{path}/meta.json", {"n": n})
 
 
 def simhash_state_append(spark, path: str, admitted_df: DataFrame,
                          text_col: str, id_col: str) -> None:
     """Fold an admitted batch's fingerprints into the persisted state —
     one parquet append of ``(id, simhash)`` rows, O(batch)."""
-    import json
+    from .maintenance import read_meta
 
-    meta = json.loads(spark.read.json(f"{path}/meta.json").first().meta)
+    meta = read_meta(spark, f"{path}/meta.json")
     simhash60(admitted_df, text_col, id_col, meta["n"]) \
         .write.mode("append").parquet(f"{path}/fingerprints")
 
@@ -1175,9 +1145,9 @@ def simhash_pairs_incremental_prepared(spark, path: str,
     corpus contributes its stored 16-byte rows.  Identical to
     ``simhash_pairs_incremental`` on the same corpus (per-doc
     fingerprints), cost ∝ batch + band collisions."""
-    import json
+    from .maintenance import read_meta
 
-    meta = json.loads(spark.read.json(f"{path}/meta.json").first().meta)
+    meta = read_meta(spark, f"{path}/meta.json")
     bn = _simhash_bands(
         simhash60(new_df, text_col, id_col, meta["n"]), max_hamming
     ).select(F.col("id").alias("new_id"), F.col("simhash").alias("sh_a"),
@@ -1553,7 +1523,7 @@ def cosine_admit_blocked(new_df: DataFrame, corpus_df: DataFrame,
     ≈ ``target_block_rows`` rows at any scale (a shared fixed count
     means corpus blocks grow linearly with the corpus; VERDICT r9
     task 3).  Block counts are result-invariant (pytest-pinned); an
-    explicit ``n_blocks`` applies to both sides (the pre-r10 form)."""
+    explicit ``n_blocks`` applies to both sides."""
     import numpy as np
 
     a_blocks = (n_blocks if n_blocks is not None
@@ -2383,7 +2353,7 @@ def substring_state_build(corpus_df: DataFrame, path: str,
     disjoint across admitted batches (the production ingest invariant —
     a re-admitted doc would double-count; use the digest screens
     upstream to enforce it)."""
-    import json
+    from .maintenance import write_meta
 
     spark = corpus_df.sparkSession
     ex = _fan_out_small_input(
@@ -2397,18 +2367,14 @@ def substring_state_build(corpus_df: DataFrame, path: str,
              F.count(F.lit(1)).cast("long").alias("ndocs"))
     )
     g.write.mode("overwrite").parquet(f"{path}/spans")
-    meta = {"window": window}
-    spark.createDataFrame([(json.dumps(meta),)], "meta string") \
-        .coalesce(1).write.mode("overwrite").json(f"{path}/meta.json")
+    write_meta(spark, f"{path}/meta.json", {"window": window})
 
 
 def _read_substring_state(spark, path: str):
-    import json
+    from .maintenance import read_meta, recover_compact_crash
 
-    from .maintenance import recover_compact_crash
-
+    meta = read_meta(spark, f"{path}/meta.json")
     recover_compact_crash(spark, f"{path}/spans")
-    meta = json.loads(spark.read.json(f"{path}/meta.json").first().meta)
     return meta, spark.read.parquet(f"{path}/spans")
 
 
@@ -2508,11 +2474,10 @@ def substring_state_delta(spark, state_path: str, admitted_df: DataFrame,
 def substring_state_compact(spark, state_path: str,
                             target_partitions: int = 32) -> None:
     """Fold pending delta rows into one row per hash and rewrite into
-    well-sized files — the same crash-safe two-rename swap as
-    ``maintenance.compact_saved_table`` (whose recovery path
-    ``_read_substring_state`` already runs on every read)."""
-    from ..functions.fsutil import fs_rename, fs_rmtree
-    from .maintenance import recover_compact_crash
+    well-sized files through ``maintenance.replace_table`` (whose
+    recovery path ``_read_substring_state`` already runs on every
+    read)."""
+    from .maintenance import recover_compact_crash, replace_table
 
     table_dir = f"{state_path}/spans"
     recover_compact_crash(spark, table_dir)
@@ -2523,9 +2488,4 @@ def substring_state_compact(spark, state_path: str,
              F.sum("ndocs").cast("long").alias("ndocs"))
         .repartition(target_partitions)
     )
-    stage = f"{state_path}/_compact_spans"
-    merged.write.mode("overwrite").parquet(stage)
-    old = f"{state_path}/_old_spans"
-    fs_rename(spark, table_dir, old)
-    fs_rename(spark, stage, table_dir)
-    fs_rmtree(spark, old)
+    replace_table(spark, table_dir, merged.write)

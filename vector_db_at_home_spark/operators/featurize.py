@@ -764,7 +764,7 @@ def maxsim_index_save(docs: DataFrame, text_col: str, id_col: str,
     CELL), ``cellstats`` (per-(cell, bucket) max/min components — the
     provable skip bound) and ``centroids`` (for assigning appended
     tokens).  See :func:`maxsim_search_indexed_pruned`."""
-    import json
+    from .maintenance import write_meta
 
     spark = docs.sparkSession
     dtok = _maxsim_doc_tokens(docs, text_col, id_col)
@@ -794,11 +794,9 @@ def maxsim_index_save(docs: DataFrame, text_col: str, id_col: str,
             .write.mode("overwrite").parquet(f"{path}/cellstats")
     docs.select(F.col(id_col).alias("id")).distinct() \
         .write.mode("overwrite").parquet(f"{path}/docids")
-    spark.createDataFrame(
-        [(json.dumps({"dim": dim, "n_buckets": n_buckets,
-                      "n_token_cells": int(n_token_cells or 0)}),)],
-        "meta string",
-    ).coalesce(1).write.mode("overwrite").json(f"{path}/meta.json")
+    write_meta(spark, f"{path}/meta.json",
+               {"dim": dim, "n_buckets": n_buckets,
+                "n_token_cells": int(n_token_cells or 0)})
 
 
 def maxsim_index_load(spark, path: str) -> MaxSimIndex:
@@ -807,23 +805,21 @@ def maxsim_index_load(spark, path: str) -> MaxSimIndex:
     window duplicate rows (see ``maxsim_index_append``) are byte-
     identical and collapse at the search path's distincts;
     ``maxsim_index_compact_saved`` removes them physically."""
-    import json
-
     from ..functions.fsutil import fs_exists
-    from .maintenance import recover_compact_crash
+    from .maintenance import read_meta, recover_compact_crash
 
+    meta = read_meta(spark, f"{path}/meta.json")
     for tbl in ("tokvecs", "postings", "docids", "tombstones",
                 "tokcells", "postings_cell", "cellstats", "centroids"):
         recover_compact_crash(spark, f"{path}/{tbl}")
-    meta = json.loads(spark.read.json(f"{path}/meta.json").first().meta)
     tokvecs = spark.read.schema("tok string, bucket int, val long") \
         .parquet(f"{path}/tokvecs")
     postings = spark.read.schema("tok string, id long, pbk int") \
         .parquet(f"{path}/postings")
     docids = spark.read.schema("id long").parquet(f"{path}/docids")
-    n_token_cells = int(meta.get("n_token_cells", 0))   # pre-r12 meta
+    n_token_cells = int(meta["n_token_cells"])
     tokcells = postings_cell = cellstats = centroids = None
-    if n_token_cells and fs_exists(spark, f"{path}/tokcells"):
+    if n_token_cells:
         tokcells = spark.read.schema("tok string, cell int") \
             .parquet(f"{path}/tokcells")
         postings_cell = spark.read.schema(
@@ -967,10 +963,11 @@ def maxsim_index_sync_deletes(spark, store, path: str,
 
 def maxsim_index_compact_saved(spark, path: str,
                                target_partitions: int = 32) -> None:
-    """Fold tombstones and crash-window duplicates physically; the
-    crash-safe two-rename swap per table (recovery runs on every
+    """Fold tombstones and crash-window duplicates physically;
+    ``maintenance.replace_table`` per table (recovery runs on every
     load)."""
-    from ..functions.fsutil import fs_exists, fs_rename, fs_rmtree
+    from ..functions.fsutil import fs_exists, fs_rmtree
+    from .maintenance import replace_table
 
     idx = maxsim_index_load(spark, path)  # load IS the recovery point
     rewrites = []
@@ -1003,16 +1000,8 @@ def maxsim_index_compact_saved(spark, path: str,
         ("docids", idx.docids.distinct().repartition(8), None),
     ]
     for name, df, part_col in rewrites:
-        table_dir = f"{path}/{name}"
-        stage = f"{path}/_compact_{name}"
-        w = df.write.mode("overwrite")
-        if part_col:
-            w = w.partitionBy(part_col)
-        w.parquet(stage)
-        old = f"{path}/_old_{name}"
-        fs_rename(spark, table_dir, old)
-        fs_rename(spark, stage, table_dir)
-        fs_rmtree(spark, old)
+        w = df.write.partitionBy(part_col) if part_col else df.write
+        replace_table(spark, f"{path}/{name}", w)
     if fs_exists(spark, f"{path}/tombstones"):
         fs_rmtree(spark, f"{path}/tombstones")
 

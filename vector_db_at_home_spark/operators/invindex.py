@@ -135,11 +135,6 @@ GROUP BY m.id ORDER BY m.id
 # --------------------------------------------------------------------------
 
 
-#: Written into ``meta.json`` by :func:`invindex_save`; a store carrying
-#: any other (or no) version is refused at load instead of half-served.
-FORMAT_VERSION = 1
-
-
 @dataclass
 class InvIndex:
     postings: "DataFrame"   # (term, id, pos, bucket) — bucket-partitioned
@@ -215,12 +210,13 @@ def invindex_save(docs: DataFrame, text_col: str, id_col: str,
     ``bucket = N`` literal — plus ``{path}/docids`` (the indexed-id
     table the append replay guard anti-joins), ``{path}/doclens`` (BM25
     lengths), ``{path}/dlstats`` (per-batch corpus scalars) and
-    ``{path}/meta.json`` (n_buckets, tokenize_mode and
-    :data:`FORMAT_VERSION`, checked at load).  Postings sort within
-    partitions by ``(term, id)`` so the parquet row-group min/max stats
-    carry tight term ranges — the pushed ``term = t`` / ``term IN (…)``
-    filters then skip row groups physically, not just rows."""
-    import json
+    ``{path}/meta.json`` (n_buckets and tokenize_mode, written by
+    ``maintenance.write_meta`` and version-checked at load).  Postings
+    sort within partitions by ``(term, id)`` so the parquet row-group
+    min/max stats carry tight term ranges — the pushed ``term = t`` /
+    ``term IN (…)`` filters then skip row groups physically, not just
+    rows."""
+    from .maintenance import write_meta
 
     spark = docs.sparkSession
     p = build_positional_index(docs, text_col, id_col, tokenize_mode) \
@@ -237,35 +233,25 @@ def invindex_save(docs: DataFrame, text_col: str, id_col: str,
         .parquet(f"{path}/dlstats")
     docs.select(F.col(id_col).alias("id")).distinct() \
         .write.mode("overwrite").parquet(f"{path}/docids")
-    spark.createDataFrame(
-        [(json.dumps({"n_buckets": n_buckets,
-                      "tokenize_mode": tokenize_mode,
-                      "format_version": FORMAT_VERSION}),)],
-        "meta string",
-    ).coalesce(1).write.mode("overwrite").json(f"{path}/meta.json")
+    write_meta(spark, f"{path}/meta.json",
+               {"n_buckets": n_buckets, "tokenize_mode": tokenize_mode})
 
 
 def invindex_load(spark, path: str) -> InvIndex:
     """Reopen a saved index as its live view: the format check, then
     crash recovery (the ``recover_compact_crash`` rule every ``*_load``
     follows), tombstones anti-joined at the postings, docids and doclens
-    scans.  A store whose ``meta.json`` carries no or another
-    ``format_version`` raises ``ValueError`` before anything is touched.
+    scans.  A store whose ``meta.json`` is missing or carries another
+    ``format_version`` raises ``ValueError`` (``maintenance.read_meta``)
+    before anything is touched.
     Pending append duplicates (the crash-torn replay window, see
     ``invindex_append``) are NOT folded here — the term-filtered search
     path dedups its tiny per-term streams, and
     ``invindex_compact_saved`` removes duplicates physically."""
-    import json
-
     from ..functions.fsutil import fs_exists
-    from .maintenance import recover_compact_crash
+    from .maintenance import read_meta, recover_compact_crash
 
-    meta = json.loads(spark.read.json(f"{path}/meta.json").first().meta)
-    if meta.get("format_version") != FORMAT_VERSION:
-        raise ValueError(
-            f"inverted index at {path} has format_version "
-            f"{meta.get('format_version')!r}, expected {FORMAT_VERSION}; "
-            "rebuild it with invindex_save")
+    meta = read_meta(spark, f"{path}/meta.json")
     for table in ("postings", "docids", "doclens", "dlstats", "tombstones"):
         recover_compact_crash(spark, f"{path}/{table}")
     # explicit schemas: a store saved from an EMPTY corpus (the
@@ -373,9 +359,10 @@ def invindex_sync_deletes(spark, store, path: str,
 def invindex_compact_saved(spark, path: str,
                            target_partitions: int = 64) -> None:
     """Fold tombstones and crash-window duplicate postings physically and
-    rewrite both tables with the crash-safe two-rename swap
+    rewrite every table with ``maintenance.replace_table``
     (``recover_compact_crash`` heals every window, via the next load)."""
-    from ..functions.fsutil import fs_exists, fs_rename, fs_rmtree
+    from ..functions.fsutil import fs_exists, fs_rmtree
+    from .maintenance import replace_table
 
     idx = invindex_load(spark, path)  # load IS the recovery point
     clean_posts = idx.postings.dropDuplicates(["term", "id", "pos"])
@@ -394,16 +381,8 @@ def invindex_compact_saved(spark, path: str,
         ("doclens", clean_dl.repartition(8), None),
     ]
     for name, df, part_col in rewrites:
-        table_dir = f"{path}/{name}"
-        stage = f"{path}/_compact_{name}"
-        w = df.write.mode("overwrite")
-        if part_col:
-            w = w.partitionBy(part_col)
-        w.parquet(stage)
-        old = f"{path}/_old_{name}"
-        fs_rename(spark, table_dir, old)
-        fs_rename(spark, stage, table_dir)
-        fs_rmtree(spark, old)
+        w = df.write.partitionBy(part_col) if part_col else df.write
+        replace_table(spark, f"{path}/{name}", w)
     if fs_exists(spark, f"{path}/tombstones"):
         fs_rmtree(spark, f"{path}/tombstones")
 
@@ -501,7 +480,8 @@ def bm25_search_indexed_batch(idx: InvIndex, queries: DataFrame,
     Serving shape vs q single calls: ONE pruned postings read for the
     UNION of all queries' terms (literal ``bucket IN`` PartitionFilter +
     ``term IN`` pushed filter, ~u/B of the store for u union terms),
-    one doclens read for the corpus scalars, one broadcast of the tiny
+    the corpus scalars from the O(#gens) dlstats rows
+    (``_dl_stats_frame``, as the single-query path), one broadcast of the tiny
     (query_id, qpos, term) fan-out, one window top-k per query — the
     per-query plan/scheduling overhead and the repeated doclens/stats
     reads amortize across the whole batch, which is the point of a
@@ -531,10 +511,7 @@ def bm25_search_indexed_batch(idx: InvIndex, queries: DataFrame,
         .select(F.col("term").alias("t"), "id", "tf")
     )
     dl = idx.doclens.select("id", "dl").distinct()
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("dl").cast("long").alias("total_toks"),
-    )
+    stats = _dl_stats_frame(idx, dl)
     qterms = spark.createDataFrame(
         [(qid, i, t) for qid, lt in qplan for i, t in enumerate(lt)],
         "query_id long, qpos int, t string",

@@ -681,8 +681,7 @@ class GraphIndex:
     k: int
     # (src, dst) Chord fingers persisted at save/append time — pass to
     # graph_ann_search(fingers=...) to skip the per-query global rank.
-    # None on a pre-r8 store (search falls back to the on-the-fly path).
-    fingers: "DataFrame | None" = None
+    fingers: "DataFrame"
 
 
 def knngraph_save(graph: DataFrame, vecs: DataFrame, path: str, k: int,
@@ -696,7 +695,7 @@ def knngraph_save(graph: DataFrame, vecs: DataFrame, path: str, k: int,
     batch; byte-identical to what the on-the-fly path would derive,
     since the fingers are a pure function of the id set),
     ``{path}/meta.json`` (k, enforced at read)."""
-    import json
+    from .maintenance import write_meta
 
     spark = graph.sparkSession
     v = vecs.select(
@@ -708,32 +707,25 @@ def knngraph_save(graph: DataFrame, vecs: DataFrame, path: str, k: int,
     v.write.mode("overwrite").parquet(f"{path}/vectors")
     navigation_edges(v.select("id")).write.mode("overwrite") \
         .parquet(f"{path}/fingers")
-    spark.createDataFrame([(json.dumps({"k": k}),)], "meta string") \
-        .coalesce(1).write.mode("overwrite").json(f"{path}/meta.json")
+    write_meta(spark, f"{path}/meta.json", {"k": k})
 
 
 def _rewrite_fingers(spark, path: str, ids: DataFrame) -> None:
-    """Regenerate ``{path}/fingers`` from the CURRENT id set with the
-    crash-safe two-rename swap (``recover_compact_crash`` heals both
+    """Regenerate ``{path}/fingers`` from the CURRENT id set with
+    ``maintenance.replace_table`` (``recover_compact_crash`` heals both
     windows at the next load).  Fingers are DERIVED data — a pure
     function of the id set — so regeneration, not incremental patching,
     is the consistency-preserving maintenance rule: every insert shifts
     the global mod-n ranks, and a stale ring would silently lose its
     O(log n) diameter guarantee."""
-    from ..functions.fsutil import fs_exists, fs_rename, fs_rmtree
+    from .maintenance import replace_table
 
-    table = f"{path}/fingers"
-    stage = f"{path}/_compact_fingers"
-    old = f"{path}/_old_fingers"
-    navigation_edges(ids).write.mode("overwrite").parquet(stage)
-    if fs_exists(spark, table):
-        fs_rename(spark, table, old)
-    fs_rename(spark, stage, table)
-    fs_rmtree(spark, old)
+    replace_table(spark, f"{path}/fingers", navigation_edges(ids).write)
 
 
 def knngraph_load(spark, path: str) -> GraphIndex:
-    """Reopen a saved graph index as its live view: crash-recovery first
+    """Reopen a saved graph index as its live view: the meta version
+    check, then crash recovery per table
     (``maintenance.recover_compact_crash``, the ADVICE-r6 self-healing
     rule every ``*_load`` follows), tombstones anti-joined at BOTH edge
     endpoints and at the vector scan, pending append deltas folded by a
@@ -741,25 +733,18 @@ def knngraph_load(spark, path: str) -> GraphIndex:
     dedup (ADVICE r7) is what makes a replayed-after-crash append
     harmless: identical delta rows collapse to one before they can
     occupy multiple top-k slots."""
-    import json
-
     from ..functions.fsutil import fs_exists
-    from .maintenance import recover_compact_crash
+    from .maintenance import read_meta, recover_compact_crash
 
-    recover_compact_crash(spark, f"{path}/edges")
-    recover_compact_crash(spark, f"{path}/vectors")
-    recover_compact_crash(spark, f"{path}/fingers")
-    meta = json.loads(spark.read.json(f"{path}/meta.json").first().meta)
-    k = int(meta["k"])
-    # defensive src!=dst: a self-edge in a hand-edited or legacy store
-    # must never occupy a top-k slot
+    k = int(read_meta(spark, f"{path}/meta.json")["k"])
+    for table in ("edges", "vectors", "fingers"):
+        recover_compact_crash(spark, f"{path}/{table}")
+    # defensive src!=dst: a self-edge in a hand-edited store must never
+    # occupy a top-k slot
     edges = spark.read.parquet(f"{path}/edges") \
         .filter(F.col("src") != F.col("dst"))
     vectors = spark.read.parquet(f"{path}/vectors")
-    fingers = (
-        spark.read.parquet(f"{path}/fingers").select("src", "dst")
-        if fs_exists(spark, f"{path}/fingers") else None  # pre-r8 store
-    )
+    fingers = spark.read.parquet(f"{path}/fingers").select("src", "dst")
     tomb = f"{path}/tombstones"
     if fs_exists(spark, tomb):
         dead = spark.read.parquet(tomb).select("id")
@@ -769,15 +754,13 @@ def knngraph_load(spark, path: str) -> GraphIndex:
                        "src", "left_anti")
             .join(dead.select(F.col("id").alias("dst")), "dst", "left_anti")
         )
-        if fingers is not None:
-            # ring holes until the next compact regenerates — the same
-            # graceful degradation the k-NN edges accept under tombstones
-            fingers = (
-                fingers.join(dead.select(F.col("id").alias("src")),
-                             "src", "left_anti")
-                .join(dead.select(F.col("id").alias("dst")),
-                      "dst", "left_anti")
-            )
+        # ring holes until the next compact regenerates — the same
+        # graceful degradation the k-NN edges accept under tombstones
+        fingers = (
+            fingers.join(dead.select(F.col("id").alias("src")),
+                         "src", "left_anti")
+            .join(dead.select(F.col("id").alias("dst")), "dst", "left_anti")
+        )
     # (src, dst) dedup BEFORE the top-k fold: a crash between an append's
     # edge and vector writes makes the replayed append re-emit the SAME
     # delta rows (the replay's beam is unaffected by the orphaned edges —
@@ -840,9 +823,10 @@ def knngraph_append(spark, path: str, new_vecs: DataFrame,
     per-call fixed cost scans the fixed-width edge/id tables once (the
     load's top-k fold and the hops-default count), plus ONE
     ``navigation_edges`` rank to regenerate ``{path}/fingers`` for the
-    grown id set (the same range exchange the pre-r8 code paid inside
-    its internal beam — moved after the write so every FUTURE query
-    batch reads the ring instead of re-deriving it).  Compaction
+    grown id set (the range exchange an on-the-fly ring costs every
+    search of an in-memory graph — paid once here, after the edge write,
+    so every FUTURE query batch reads the ring instead of re-deriving
+    it).  Compaction
     cadence bounds the fold."""
     idx = knngraph_load(spark, path)
     nv = new_vecs.select(
@@ -855,8 +839,7 @@ def knngraph_append(spark, path: str, new_vecs: DataFrame,
     qs = nv.select(F.col("id").alias("query_id"),
                    F.col("vec").alias("qvec"))
     beam = graph_ann_search(idx.vectors, idx.edges, qs, k=idx.k,
-                            beam=2 * idx.k, fingers=idx.fingers,
-                            navigable=idx.fingers is None)
+                            beam=2 * idx.k, fingers=idx.fingers)
     new_edges = beam.select(
         F.col("query_id").alias("src"), F.col("id").alias("dst"),
         (F.col("distance") * F.col("distance")).alias("d2"),
@@ -938,11 +921,12 @@ def knngraph_compact_saved(spark, path: str,
                            target_partitions: int = 32) -> None:
     """Fold pending edge deltas to the exact per-src top-k, drop
     tombstoned nodes physically from both tables, clear the tombstones —
-    the crash-safe two-rename swap per table
+    ``maintenance.replace_table`` per table
     (``maintenance.recover_compact_crash`` heals every window; a crash
     between the swap and the tombstone clear re-applies an already-
     folded filter, a no-op)."""
-    from ..functions.fsutil import fs_exists, fs_rename, fs_rmtree
+    from ..functions.fsutil import fs_exists, fs_rmtree
+    from .maintenance import replace_table
 
     # knngraph_load already ran recover_compact_crash on all tables —
     # the load IS the recovery point for this function
@@ -955,13 +939,7 @@ def knngraph_compact_saved(spark, path: str,
     # identical either side of the swap.
     _rewrite_fingers(spark, path, idx.vectors.select("id"))
     for name, df in (("edges", idx.edges), ("vectors", idx.vectors)):
-        table_dir = f"{path}/{name}"
-        stage = f"{path}/_compact_{name}"
-        df.repartition(target_partitions).write.mode("overwrite") \
-            .parquet(stage)
-        old = f"{path}/_old_{name}"
-        fs_rename(spark, table_dir, old)
-        fs_rename(spark, stage, table_dir)
-        fs_rmtree(spark, old)
+        replace_table(spark, f"{path}/{name}",
+                      df.repartition(target_partitions).write)
     if fs_exists(spark, f"{path}/tombstones"):
         fs_rmtree(spark, f"{path}/tombstones")

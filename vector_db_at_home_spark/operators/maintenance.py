@@ -1,24 +1,34 @@
-"""Saved-index maintenance: small-file compaction for the append-only
-index stores.
+"""Saved-index state: the meta file, the table swap and crash recovery
+every index family shares, plus small-file compaction for the
+append-only index stores.
+
+- :func:`write_meta` / :func:`read_meta` — every saved index (inverted
+  index, MaxSim, MinHash / SimHash / substring state, kNN graph, the IVF
+  drift baseline) carries a plain driver-written JSON file stamped with
+  :data:`FORMAT_VERSION`; reading it starts no Spark job, and a file that
+  is missing, is not plain JSON, or carries another version is refused
+  with a ``ValueError`` naming the path.
+- :func:`replace_table` — the crash-safe two-rename swap every rewrite
+  (compaction, tombstone fold, derived-table regeneration) goes through:
+
+  - stage the rewrite next to the table (``_compact_<name>``),
+  - rename the live table to ``_old_<name>``, the stage to the live name,
+  - drop the old copy.
+
+  A crash before the first rename leaves the old layout; a crash between
+  the renames parks the table at ``_old_<name>`` with no live copy; a
+  crash before the final delete leaves ``_old_<name>`` beside the live
+  table.  :func:`recover_compact_crash` heals both (run it per table at
+  the top of every compact and every ``*_load``).
 
 Every incremental sync (``ann.ivf_sync_with_store``,
 ``pq.pq_sync_with_store``, ``sq.ivfsq_sync_with_store``) APPENDS a small
 parquet file set; at a per-micro-batch cadence the saved index
 accumulates thousands of tiny files — the classic small-files problem
 (each costs a task + an open at probe time).  ``compact_saved_table``
-rewrites one table directory into well-sized files with the same
-crash-safe two-rename swap as ``dedup.minhash_corpus_state_compact``:
-
-- stage the rewrite next to the table (``_compact_<name>``),
-- rename the live table to ``_old_<name>``, the stage to the live name,
-- drop the old copy.
-
-A crash before the first rename leaves the old layout; a crash between
-the renames parks the table at ``_old_<name>`` with no live copy —
-``recover_compact_crash`` (run at the top of every compact; call it
-before direct reads of a possibly-crashed store) renames it back.  All
-path operations go through the Hadoop FileSystem API
-(``functions.fsutil``) so indexes may live on HDFS/S3A.
+rewrites one table directory into well-sized files through
+:func:`replace_table`.  All path operations go through the Hadoop
+FileSystem API (``functions.fsutil``) so indexes may live on HDFS/S3A.
 
 Reader caveat (same as Delta OPTIMIZE): a DataFrame loaded BEFORE the
 compact holds the old file listing and fails on next action once the
@@ -28,9 +38,64 @@ no data version disappears; only the file layout changes.
 
 from __future__ import annotations
 
+import json
+
+#: Stamped into every ``meta.json`` by :func:`write_meta`; a saved index
+#: carrying any other (or no) version is refused at read instead of
+#: half-served.
+FORMAT_VERSION = 2
+
+
+def write_meta(spark, file: str, meta: dict) -> None:
+    """Write a saved index's parameters as one plain JSON file, stamped
+    with :data:`FORMAT_VERSION` (atomic replace, ``fs_write_text``)."""
+    from ..functions.fsutil import fs_write_text
+
+    fs_write_text(spark, file,
+                  json.dumps({**meta, "format_version": FORMAT_VERSION}))
+
+
+def read_meta(spark, file: str) -> dict:
+    """The dict :func:`write_meta` wrote — a driver-side file read, no
+    Spark job.  Raises ``ValueError`` naming ``file`` and the expected
+    version when the file is missing, is not a plain JSON object (e.g.
+    the older Spark-written ``meta.json`` directory), or carries another
+    ``format_version``.  On a remote filesystem a missing file raises
+    that filesystem's own not-found error."""
+    from ..functions.fsutil import fs_read_text
+
+    try:
+        meta = json.loads(fs_read_text(spark, file))
+    except (OSError, ValueError) as e:
+        raise ValueError(
+            f"saved index meta {file} is missing or not a plain JSON "
+            f"file, format_version expected {FORMAT_VERSION}; rebuild "
+            "the index") from e
+    version = meta.get("format_version") if isinstance(meta, dict) else None
+    if version != FORMAT_VERSION:
+        raise ValueError(
+            f"saved index meta {file} has format_version {version!r}, "
+            f"expected {FORMAT_VERSION}; rebuild the index")
+    return meta
+
+
+def replace_table(spark, table_dir: str, writer) -> None:
+    """Swap the parquet output of ``writer`` (a configured
+    ``DataFrameWriter``; the mode is set here) in for ``table_dir`` with
+    the two-rename swap of the module docstring.  The writer's plan may
+    read ``table_dir`` itself: the stage is written before any rename."""
+    from ..functions.fsutil import fs_rename, fs_rmtree
+
+    parent, _, name = table_dir.rstrip("/").rpartition("/")
+    stage, old = f"{parent}/_compact_{name}", f"{parent}/_old_{name}"
+    writer.mode("overwrite").parquet(stage)
+    fs_rename(spark, table_dir, old)
+    fs_rename(spark, stage, table_dir)
+    fs_rmtree(spark, old)
+
 
 def recover_compact_crash(spark, table_dir: str) -> None:
-    """Heal both non-atomic windows of the two-rename swap:
+    """Heal both non-atomic windows of :func:`replace_table`:
 
     - ``_old_<name>`` exists, live table MISSING → crash between the two
       renames; rename the old copy back and drop stale staging.
@@ -70,9 +135,10 @@ def tombstones_resurrect_ids(spark, tomb_dir: str, ids: "DataFrame") -> int:
     reuses ids (max+1 allocation), so this arises only from external id
     management.
 
-    Crash-safe two-rename swap, healed by ``recover_compact_crash`` (run
-    here and by every ``*_load``).  Returns the number of tombstones
-    removed; no-op (0) when the table is absent or disjoint from ``ids``.
+    Crash-safe :func:`replace_table` swap, healed by
+    ``recover_compact_crash`` (run here and by every ``*_load``).
+    Returns the number of tombstones removed; no-op (0) when the table
+    is absent or disjoint from ``ids``.
 
     Concurrency contract (ADVICE r11): SINGLE WRITER, NO CONCURRENT
     READERS during the swap.  Between the two renames the tombstone
@@ -87,7 +153,7 @@ def tombstones_resurrect_ids(spark, tomb_dir: str, ids: "DataFrame") -> int:
     results rather than an error, so serve from a separate index copy
     (or quiesce readers) when running maintenance against live traffic.
     """
-    from ..functions.fsutil import fs_exists, fs_rename, fs_rmtree
+    from ..functions.fsutil import fs_exists
 
     recover_compact_crash(spark, tomb_dir)
     if not fs_exists(spark, tomb_dir):
@@ -98,13 +164,7 @@ def tombstones_resurrect_ids(spark, tomb_dir: str, ids: "DataFrame") -> int:
     n_drop = t.count() - keep.count()
     if n_drop == 0:
         return 0
-    parent, _, name = tomb_dir.rstrip("/").rpartition("/")
-    stage = f"{parent}/_compact_{name}"
-    keep.coalesce(1).write.mode("overwrite").parquet(stage)
-    old = f"{parent}/_old_{name}"
-    fs_rename(spark, tomb_dir, old)
-    fs_rename(spark, stage, tomb_dir)
-    fs_rmtree(spark, old)
+    replace_table(spark, tomb_dir, keep.coalesce(1).write)
     return n_drop
 
 
@@ -122,10 +182,6 @@ def compact_saved_table(spark, table_dir: str,
     propagation).  Content otherwise identical; crash-safe per the
     module docstring."""
     recover_compact_crash(spark, table_dir)
-    from ..functions.fsutil import fs_rename, fs_rmtree
-
-    parent, _, name = table_dir.rstrip("/").rpartition("/")
-    stage = f"{parent}/_compact_{name}"
     df = spark.read.parquet(table_dir)
     if minus_ids_dir is not None:
         df = df.join(
@@ -133,15 +189,11 @@ def compact_saved_table(spark, table_dir: str,
             "id", "left_anti",
         )
     if partition_by is not None:
-        rewritten = df.repartition(target_partitions, partition_by) \
+        writer = df.repartition(target_partitions, partition_by) \
             .write.partitionBy(partition_by)
     else:
-        rewritten = df.repartition(target_partitions).write
-    rewritten.mode("overwrite").parquet(stage)
-    old = f"{parent}/_old_{name}"
-    fs_rename(spark, table_dir, old)
-    fs_rename(spark, stage, table_dir)
-    fs_rmtree(spark, old)
+        writer = df.repartition(target_partitions).write
+    replace_table(spark, table_dir, writer)
 
 
 def ivf_compact_saved(spark, path: str,

@@ -224,7 +224,8 @@ def clean_corpus_v2_stage_counts(spark: SparkSession, sf_dir: str,
     call.  With the checkpoints every heavy stage runs EXACTLY ONCE and
     every downstream branch is a documents scan + semi/anti joins on
     fixed-width ids (measured at sf1: wall 115 s → ~45 s, shuffle
-    2.5 GB → well under the r8 target; tools/r9ops_scale_smoke.py).
+    2.5 GB → well under the r8 target; SCALE.md, round-9 operators —
+    the smoke script that measured it is in git history).
     Values are unchanged — the sets are deterministic, checkpointing
     only pins where they materialize."""
     from ..operators.dedup import (
@@ -791,14 +792,7 @@ def clean_corpus_admit_batch(spark: SparkSession, root: str,
         from ..functions.fsutil import fs_read_text as _fsr
 
         ids = spark.read.schema("doc_id long").parquet(f"{marker}/ids")
-        try:  # r13 layout: counts.json is a plain driver-written file
-            txt = _fsr(spark, f"{marker}/counts.json")
-        except Exception:  # pre-r13 marker: a Spark text-write directory
-            txt = (
-                spark.read.text(f"{marker}/counts.json")
-                .agg(F.concat_ws("", F.collect_list("value"))).first()[0]
-            )
-        recorded = _json.loads(txt)
+        recorded = _json.loads(_fsr(spark, f"{marker}/counts.json"))
         return ids, [(s, int(n)) for s, n in recorded]
 
     if marker is not None and fs_exists(spark, f"{marker}/_COMMITTED"):
@@ -1004,8 +998,9 @@ def _admit_write_back(spark, root: str, marker: str | None,
     touching ``{marker}/_applied_<family>`` after each so a replay
     after a crash at any inter-family gap skips the completed families
     and finishes the rest; ``_COMMITTED`` lands last.  With
-    ``marker=None`` (no ``batch_id``) the appends run unguarded — the
-    pre-r10 behavior.
+    ``marker=None`` (no ``batch_id``) each family appends directly and
+    no marker is written or read, so a crashed call is not exactly-once
+    on replay.
 
     The parquet-append families (minhash/substring/digests/embeddings)
     go through :func:`_exactly_once_append` (r11): their deltas stage
@@ -1089,7 +1084,7 @@ def _admit_write_back(spark, root: str, marker: str | None,
             # inert, fully-moved staging tree — clean it on the skip
             fs_rmtree(spark, f"{marker}/_staging_{name}")
             continue
-        if marker is None:  # unguarded pre-r10 path: plain appends
+        if marker is None:  # no batch_id: plain appends
             for df, dataset_dir in _sized(delta_fn()):
                 df.write.mode("append").parquet(dataset_dir)
         else:

@@ -100,10 +100,11 @@ def stream_into_store_neardup(stream_df: DataFrame, store: VectorStore,
     otherwise accumulate one small-file set PER BATCH FOREVER, the
     streaming-side gap the batch operators' compaction cadence never
     covered.  The compact is a pure rewrite (content pytest-pinned
-    identical) staged + double-renamed, healed by
-    ``_recover_compact_crash`` on every read, so a replay that re-runs
-    the compaction batch is idempotent: the append is marker-skipped,
-    the re-compact rewrites identical content.  Committed batch markers
+    identical) through ``maintenance.replace_table``, healed by
+    ``maintenance.recover_compact_crash`` on every read, so a replay
+    that re-runs the compaction batch is idempotent: the append is
+    marker-skipped, the re-compact rewrites identical content.
+    Committed batch markers
     older than the current batch are pruned at the same cadence
     (foreachBatch can only replay the LAST uncommitted batch), so the
     marker directory stays O(compact interval) instead of O(stream
