@@ -36,146 +36,194 @@ def test_identity():
     assert indel_ratio("hello world", "hello world") == 100.0
 
 
-def test_prefilter_matches_unfiltered(spark):
-    """The length-band prefilter is exact: identical top-k (values AND
-    tie-resolution) to scoring every pair, on a corpus with heavy length
-    variation and score ties."""
-    from vector_db_at_home_spark.operators.fuzzysearch import fuzzy_search_by_doc
+def _dp_lcs(a: str, b: str) -> int:
+    """Textbook O(|a|·|b|) LCS table — independent of the bit-parallel
+    kernel."""
+    prev = [0] * (len(b) + 1)
+    for ca in a:
+        cur = [0]
+        for j, cb in enumerate(b):
+            cur.append(prev[j] + 1 if ca == cb else max(prev[j + 1], cur[j]))
+        prev = cur
+    return prev[-1]
 
-    docs = [(i, ("word%d " % (i % 7)) * (1 + i % 40)) for i in range(120)]
+
+def _dp_distance(q: str, d: str | None) -> float:
+    """The reference distance in the engine's IEEE op order, from the DP
+    LCS: ``100 - 100·(1 - (total - 2·lcs) / total)``, 0 when both empty."""
+    d = d or ""
+    total = len(q) + len(d)
+    if total == 0:
+        return 0.0
+    return 100.0 - 100.0 * (1.0 - (total - 2 * _dp_lcs(q, d)) / total)
+
+
+_ADVERSARIAL_QUERIES = [
+    "", "a", "aaaa", "abcabcabc", "x" * 70, "spark window merge sort " * 3,
+    "naïve café ☕ 日本語", '{"k1": "v1"}',
+]
+_ADVERSARIAL_DOCS = [
+    None, "", "a", "aaaaaaa", "bbbb", "cbacbacba", "x" * 65, "y" * 200,
+    "spark window merge sort", "café naïve 日本 ☕☕", '{"k1": "v1"}',
+    "ab" * 40,
+]
+
+
+def test_indel_ratio_fn_is_bit_exact():
+    """The one-query scorer equals ``indel_ratio`` and the DP reference
+    distance bit for bit: empty on either side, queries over 64 chars,
+    repeated characters, non-ASCII text and ``None`` docs."""
+    from vector_db_at_home_spark.functions.fuzzy import indel_ratio_fn
+
+    for q in _ADVERSARIAL_QUERIES:
+        ratio = indel_ratio_fn(q)
+        for d in _ADVERSARIAL_DOCS:
+            assert ratio(d) == indel_ratio(q, d or ""), (q, d)
+            assert 100.0 - ratio(d) == _dp_distance(q, d), (q, d)
+
+
+def _brute_topk(docs, queries, k):
+    """Per query, the ``(distance, id)`` list of scoring EVERY doc,
+    ranked by (distance, id) and cut to k."""
+    return [sorted((_dp_distance(q, d), i) for i, d in docs)[:k]
+            for q in queries]
+
+
+def _collect(df, queries, k, **kw):
+    from vector_db_at_home_spark.operators.fuzzysearch import (
+        fuzzy_search_collect,
+    )
+
+    id_col = kw.get("id_col", "id")
+    return [[(r.distance, r[id_col]) for r in rs]
+            for rs in fuzzy_search_collect(df, queries, k, **kw)]
+
+
+@pytest.fixture(scope="module")
+def tied_docs(spark):
+    """Docs over 4 partitions with many equal distances: each text (one of
+    7 words repeated 1-6 times) appears 3-4 times under different ids;
+    plus an empty and a null doc.  Returns (docs, df, id → partition)."""
+    from pyspark.sql import functions as F
+
+    docs = [(i, ("word%d " % (i % 7)) * (1 + (i // 7) % 6)) for i in range(150)]
     docs += [(200, ""), (201, None), (202, "word1 word2 word3")]
-    df = spark.createDataFrame(docs, "id long, doc string")
-    qs = ["word1 word2 word3", "word4 " * 10, ""]
-    on = fuzzy_search_by_doc(df, qs, k=7, prefilter=True).collect()
-    off = fuzzy_search_by_doc(df, qs, k=7, prefilter=False).collect()
-    assert [(r.query_id, r.id, r.distance) for r in on] == \
-        [(r.query_id, r.id, r.distance) for r in off]
+    df = spark.createDataFrame(docs, "id long, doc string").repartition(4)
+    df = df.cache()
+    part = {r.id: r.p for r in
+            df.select("id", F.spark_partition_id().alias("p")).collect()}
+    return docs, df, part
 
 
-def test_prefilter_scores_candidate_subset(spark):
-    """On a length-varied corpus the banded candidate set is a strict
-    subset of the N·m cross product — the scorer UDF work actually drops."""
-    from vector_db_at_home_spark.operators.fuzzysearch import fuzzy_candidates
-
-    docs = [(i, "x" * (5 + 13 * i)) for i in range(80)]  # lengths 5..1032
-    df = spark.createDataFrame(docs, "id long, doc string")
-    qs = ["x" * 10, "x" * 500]
-    n_cand = fuzzy_candidates(df, qs, k=5).count()
-    assert n_cand < 80 * 2 * 0.5  # less than half the cross product
-    assert n_cand >= 2 * 5        # at least k per query survives
-
-def test_multiset_bound_matches_unfiltered(spark):
-    """bound="multiset" stays exact: same top-k (values and ties) as
-    scoring every pair, on a corpus with same-length docs over different
-    alphabets (where the length bound alone is blind)."""
-    from vector_db_at_home_spark.operators.fuzzysearch import fuzzy_search_by_doc
-
-    docs = [(i, ("abc%d " % (i % 5)) * (1 + i % 20)) for i in range(60)]
-    docs += [(100 + i, ("zqw%d " % (i % 5)) * (1 + i % 20)) for i in range(60)]
-    docs += [(300, ""), (301, None)]
-    df = spark.createDataFrame(docs, "id long, doc string")
-    qs = ["abc1 abc2 abc3", "zqw0 " * 8, ""]
-    on = fuzzy_search_by_doc(df, qs, k=6, prefilter=True,
-                             bound="multiset").collect()
-    off = fuzzy_search_by_doc(df, qs, k=6, prefilter=False).collect()
-    assert [(r.query_id, r.id, r.distance) for r in on] == \
-        [(r.query_id, r.id, r.distance) for r in off]
+@pytest.mark.parametrize("k", [1, 3, 153])
+def test_fuzzy_topk_matches_brute_force(tied_docs, k):
+    """k=1, k=3 and k=N: identical (distance, id) lists to the brute-force
+    scan, ties at the k-th distance resolved by id across partitions."""
+    docs, df, part = tied_docs
+    qs = ["word1 word2 word3", "word4 " * 10, "word0"]
+    brute = _brute_topk(docs, qs, k)
+    if k < len(docs):
+        # for "word0" the cut lands inside a tie that spans partitions
+        ranked = _brute_topk(docs, qs, len(docs))[2]
+        kth = ranked[k - 1][0]
+        assert ranked[k][0] == kth
+        assert len({part[i] for d, i in ranked if d == kth}) >= 2
+    assert _collect(df, qs, k) == brute
 
 
-def test_multiset_band_is_tighter_than_length_band(spark):
-    """Same-length docs, disjoint alphabets: the character-multiset bound
-    excludes the wrong-alphabet half that the length bound cannot."""
-    from vector_db_at_home_spark.operators.fuzzysearch import fuzzy_candidates
-
-    # 40 docs of identical length: half 'a'-alphabet, half 'z'-alphabet
-    docs = [(i, "a" * 50) for i in range(20)]
-    docs += [(100 + i, "z" * 50) for i in range(20)]
-    df = spark.createDataFrame(docs, "id long, doc string")
-    qs = ["a" * 50]
-    n_len = fuzzy_candidates(df, qs, k=3, bound="length").count()
-    n_multi = fuzzy_candidates(df, qs, k=3, bound="multiset").count()
-    assert n_len == 40        # length bound can't separate anything
-    assert n_multi == 20      # multiset bound drops the 'z' half
-    # and the surviving band still contains the true top-k ids
-    from vector_db_at_home_spark.operators.fuzzysearch import fuzzy_search_by_doc
-
-    exact = fuzzy_search_by_doc(df, qs, k=3, prefilter=False).collect()
-    cand_ids = {r.id for r in
-                fuzzy_candidates(df, qs, k=3, bound="multiset").collect()}
-    assert {r.id for r in exact} <= cand_ids
+def test_fuzzy_topk_carries_top_k_across_arrow_batches(spark, tied_docs):
+    """With 7-row Arrow batches each task sees many batches; its running
+    top-k (and the rows it points at) must carry over between them."""
+    docs, df, _ = tied_docs
+    qs = ["word1 word2 word3", "word0", ""]
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        for k in (1, 3, 20):
+            assert _collect(df, qs, k) == _brute_topk(docs, qs, k)
+    finally:
+        spark.conf.set(key, old)
 
 
-def test_bound_arg_validated(spark):
-    from vector_db_at_home_spark.operators.fuzzysearch import fuzzy_search_by_doc
-    import pytest as _pytest
+def test_fuzzy_topk_length_bound_stops_scoring(monkeypatch):
+    """The kernel stops scoring once the length bound passes the k-th
+    distance, also in a later Arrow batch.  For 'x'*5 against 'x'*L the
+    distance equals the bound, so with k=2 only the two winners are
+    scored: the next doc's bound already exceeds the 2nd distance."""
+    import pyarrow as pa
 
-    df = spark.createDataFrame([(1, "abc")], "id long, doc string")
-    with _pytest.raises(ValueError, match="bound"):
-        fuzzy_search_by_doc(df, ["ab"], k=1, bound="nope").collect()
+    from vector_db_at_home_spark.functions.fuzzy import indel_ratio_fn
+    from vector_db_at_home_spark.operators import fuzzysearch
+
+    scored = []
+
+    def counting_fn(query):
+        ratio = indel_ratio_fn(query)
+        return lambda doc: scored.append(doc) or ratio(doc)
+
+    monkeypatch.setattr(fuzzysearch, "indel_ratio_fn", counting_fn)
+    docs = [(i, "x" * (5 + 13 * i)) for i in range(20)]
+    batches = [pa.RecordBatch.from_pylist([{"id": i, "doc": d} for i, d in part])
+               for part in (docs[:10], docs[10:])]
+    kernel = fuzzysearch._topk_kernel(["x" * 5], 2, "doc", "id")
+    out = pa.Table.from_batches(list(kernel(iter(batches))))
+    got = sorted(zip(out.column("distance").to_pylist(),
+                     out.column("id").to_pylist()))
+    assert [got] == _brute_topk(docs, ["x" * 5], 2)
+    assert len(scored) == 2
 
 
-def test_large_batch_uses_broadcast_band(spark, monkeypatch):
-    """Above _MAX_INLINE_LITERALS provisional rows the band switches from
-    literal OR-chain predicates to broadcast joins: results stay identical
-    to the literal path AND the analyzed plan no longer grows with the
-    query-batch size (VERDICT r4 #1 — thousand-query screening batches)."""
-    import vector_db_at_home_spark.operators.fuzzysearch as fz
+def test_fuzzy_topk_k_over_n_truncates(tied_docs):
+    docs, df, _ = tied_docs
+    got = _collect(df, ["word2"], 1000)
+    assert len(got[0]) == len(docs)
+    assert got == _brute_topk(docs, ["word2"], 1000)
 
-    docs = [(i, ("tok%d " % (i % 9)) * (1 + i % 15)) for i in range(50)]
-    docs += [(100, ""), (101, None)]
-    df = spark.createDataFrame(docs, "id long, doc string")
+
+def test_fuzzy_topk_empty_store_and_empty_query(spark, tied_docs):
+    from vector_db_at_home_spark.operators.fuzzysearch import (
+        fuzzy_search_collect,
+    )
+
+    empty = spark.createDataFrame([], "id long, doc string")
+    assert fuzzy_search_collect(empty, ["x", ""], 3) == [[], []]
+    docs, df, _ = tied_docs
+    # "" vs "" and "" vs null are distance 0, tie broken by id
+    got = _collect(df, [""], 3)
+    assert got == [[(0.0, 200), (0.0, 201), (100.0, 0)]]
+    assert got == _brute_topk(docs, [""], 3)
+
+
+def test_fuzzy_topk_many_queries_doc_id_and_payload(spark):
+    """Forty queries in one call against a ``doc_id``-keyed table whose
+    other columns ride along unchanged; the DataFrame wrapper keeps the
+    column names, types and order."""
+    from vector_db_at_home_spark.operators.fuzzysearch import (
+        fuzzy_search_by_doc,
+    )
+
+    rows = [(i, ("tok%d " % (i % 9)) * (1 + i % 15), f"p{i}", [float(i)])
+            for i in range(60)]
+    rows += [(100, None, "pnull", [0.5])]
+    df = spark.createDataFrame(
+        rows, "doc_id long, text string, tag string, vec array<float>"
+    ).repartition(3)
     qs = ["tok%d tok%d" % (i % 9, (i + 1) % 9) for i in range(40)]
     k = 4
+    got = _collect(df, qs, k, doc_col="text", id_col="doc_id")
+    assert got == _brute_topk([(r[0], r[1]) for r in rows], qs, k)
 
-    # force the join path (40*4 = 160 rows > 8) vs the literal path
-    monkeypatch.setattr(fz, "_MAX_INLINE_LITERALS", 8)
-    join_df = fz.fuzzy_search_by_doc(df, qs, k=k)
-    join_res = [(r.query_id, r.id, r.distance) for r in join_df.collect()]
-    monkeypatch.setattr(fz, "_MAX_INLINE_LITERALS", 10**9)
-    lit_df = fz.fuzzy_search_by_doc(df, qs, k=k)
-    lit_res = [(r.query_id, r.id, r.distance) for r in lit_df.collect()]
-    assert join_res == lit_res
-    assert len({r[0] for r in join_res}) == len(qs)
-
-    # plan-size bound: the join-path condition tree carries no OR-chain of
-    # per-query literals — its analyzed plan is ~flat in m, the literal
-    # path's grows linearly
-    join_plan = join_df._jdf.queryExecution().analyzed().toString()
-    lit_plan = lit_df._jdf.queryExecution().analyzed().toString()
-    assert join_plan.count("query_id#") < lit_plan.count("query_id#")
-
-
-def test_large_batch_candidates_match(spark, monkeypatch):
-    """fuzzy_candidates takes the same broadcast switch and returns the
-    same (superset) band either way."""
-    import vector_db_at_home_spark.operators.fuzzysearch as fz
-
-    docs = [(i, "y" * (3 + 7 * (i % 30))) for i in range(60)]
-    df = spark.createDataFrame(docs, "id long, doc string")
-    qs = ["y" * (5 + j) for j in range(12)]
-    monkeypatch.setattr(fz, "_MAX_INLINE_LITERALS", 4)
-    via_join = {(r.query_id, r.id)
-                for r in fz.fuzzy_candidates(df, qs, k=3).collect()}
-    monkeypatch.setattr(fz, "_MAX_INLINE_LITERALS", 10**9)
-    via_lit = {(r.query_id, r.id)
-               for r in fz.fuzzy_candidates(df, qs, k=3).collect()}
-    assert via_join == via_lit
-
-
-def test_provisional_ceiling_guard(spark, monkeypatch):
-    """Query batches whose k*m provisional set exceeds the driver-side
-    ceiling fail loudly with guidance (split the batch / prefilter=False);
-    prefilter=False stays available at any batch size."""
-    import vector_db_at_home_spark.operators.fuzzysearch as fz
-
-    df = spark.createDataFrame(
-        [(i, "w%d" % i) for i in range(6)], "id long, doc string")
-    monkeypatch.setattr(fz, "_MAX_PROVISIONAL_ROWS", 5)
-    with pytest.raises(ValueError, match="driver-side ceiling"):
-        fz.fuzzy_search_by_doc(df, ["a", "b", "c"], k=2)
-    out = fz.fuzzy_search_by_doc(df, ["a", "b", "c"], k=2,
-                                 prefilter=False).collect()
-    assert len(out) == 6
+    res = fuzzy_search_by_doc(df, qs, k, doc_col="text", id_col="doc_id")
+    assert res.columns == ["query_id", "doc_id", "text", "tag", "vec",
+                           "distance"]
+    assert dict(res.dtypes)["query_id"] == "int"
+    out = res.collect()
+    assert [(r.query_id, r.distance, r.doc_id) for r in out] == [
+        (qi, d, i) for qi, hits in enumerate(got) for d, i in hits]
+    by_id = {r[0]: r for r in rows}
+    for r in out:
+        assert (r.text, r.tag, r.vec) == by_id[r.doc_id][1:]
 
 
 def test_antidiagonal_duckdb_oracle_matches_bitparallel_lcs():

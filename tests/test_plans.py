@@ -102,55 +102,6 @@ def test_select_ids_filter_pushdown(spark):
     assert has_pushed_filters(df, "vec_id")
 
 
-def test_fuzzy_prefilter_plan_shape(spark):
-    """The banded fuzzy plan: phase 1 runs eagerly (its k·m scores become
-    literals), so the RETURNED plan holds exactly ONE Arrow scorer node
-    over the thresholded band, the query table broadcast, literal
-    threshold/anti predicates (no threshold join), and the final top-k via
-    WindowGroupLimit."""
-    from vector_db_at_home_spark.operators.fuzzysearch import fuzzy_search_by_doc
-    from vector_db_at_home_spark.sources import load_table
-
-    docs = load_table(spark, SF, "documents")
-    df = fuzzy_search_by_doc(docs, ["alpha beta", "gamma"], k=5,
-                             doc_col="text", id_col="doc_id")
-    import re
-
-    plan = formatted_plan(df)
-    assert has_window_group_limit(df)
-    assert broadcast_join_count(df) >= 1
-    # formatted mode lists each node once in the tree and once in the
-    # details; one scorer node = exactly one detail header
-    assert len(re.findall(r"^\(\d+\) ArrowEvalPython", plan,
-                          re.MULTILINE)) == 1
-
-
-def test_fuzzy_scores_each_candidate_exactly_once(spark):
-    """VERDICT r3 #2: the k·m provisional rows must NOT be re-scored in
-    the band pass.  Counted via an accumulator inside the scorer UDF:
-    total scored rows == |band| (provisional ⊆ band, each pair once) —
-    the old double-scoring plan would add k·m on top."""
-    from vector_db_at_home_spark.operators.fuzzysearch import (
-        fuzzy_candidates,
-        fuzzy_search_by_doc,
-    )
-    from vector_db_at_home_spark.sources import load_table
-
-    docs = load_table(spark, SF, "documents")
-    qs = ["alpha beta gamma", "the quick brown fox"]
-    k = 5
-    n_band = fuzzy_candidates(docs, qs, k, doc_col="text",
-                              id_col="doc_id").count()
-    counter = spark.sparkContext.accumulator(0)
-    res = fuzzy_search_by_doc(docs, qs, k, doc_col="text", id_col="doc_id",
-                              score_counter=counter)
-    assert res.count() == k * len(qs)
-    assert counter.value == n_band
-    # and the band is a strict subset of the brute-force N·m scoring
-    n_total = docs.count() * len(qs)
-    assert n_band < n_total
-
-
 def test_cosine_neardup_bucketed_no_cartesian(spark):
     """The LSH near-dup plan is all keyed joins — no cartesian product and
     no nested-loop join anywhere."""

@@ -330,6 +330,19 @@ def test_warm_search_is_one_job_and_count_none(spark, tmp_path, jobs_run):
     assert (n, jobs) == (200, 0)
 
 
+def test_warm_search_by_doc_is_one_job(spark, tmp_path, jobs_run):
+    """A warm store answers ``search_by_doc`` (1 or 3 queries) with one
+    Spark job: no band, no window, no payload join."""
+    vs = VectorStore(spark, tmp_path / "fjobs", dim=DIM)
+    vs.insert(np.ones((50, DIM), dtype=np.float32), gen_docs(range(50)))
+    vs.search_by_doc(["v4"], k=3)  # fills the cache
+    res, jobs = jobs_run(lambda: vs.search_by_doc(["v4"], k=3))
+    assert jobs == 1 and len(res) == 1 and res[0][0].id == 4
+    res, jobs = jobs_run(
+        lambda: vs.search_by_doc([{"1": "1"}, "v4", "k7"], k=5))
+    assert jobs == 1 and [len(r) for r in res] == [5, 5, 5]
+
+
 def _expr_knn(spark, vs, queries, k):
     """Per query, the (id, distance) list of ``knn_search(impl="expr")``
     over ``vs.df()``."""

@@ -386,6 +386,55 @@ def test_stream_ingest_neardup_with_persisted_state(spark, tmp_path):
     assert not any("xyz" in d for d in docs)
 
 
+def test_neardup_screen_heals_compact_crash_instead_of_rebuilding(
+        spark, tmp_path, monkeypatch):
+    """A crash between ``minhash_corpus_state_compact``'s two renames
+    leaves ``bands`` parked at ``_old_bands``.  The next screened batch
+    renames it back (``maintenance.recover_compact_crash``) and keeps the
+    state's rows — it must not rebuild the whole state from the store."""
+    import vector_db_at_home_spark.operators.dedup as dedup
+    from vector_db_at_home_spark.store import VectorStore
+    from vector_db_at_home_spark.streaming.neardup import (
+        stream_into_store_neardup,
+    )
+
+    store = VectorStore(spark, tmp_path / "hstore", dim=2)
+    wrap = lambda t: '{"t": "%s"}' % t
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    store.insert([[1.0, 0.0]], [{"t": base}])
+    feed, state_dir = str(tmp_path / "hfeed"), str(tmp_path / "hstate")
+
+    def run_batch(rows, mode):
+        spark.createDataFrame(rows, "vec array<float>, doc string") \
+            .coalesce(1).write.mode(mode).parquet(feed)
+        stream_into_store_neardup(
+            (spark.readStream.schema("vec array<float>, doc string")
+             .parquet(feed)),
+            store, jaccard_threshold=0.4,
+            checkpoint_dir=str(tmp_path / "hckpt"), state_dir=state_dir,
+        ).awaitTermination()
+
+    novel = "one two three four five six seven eight nine ten"
+    run_batch([([0.0, 1.0], wrap(novel))], "overwrite")
+    assert store.count() == 2
+    os.rename(f"{state_dir}/bands", f"{state_dir}/_old_bands")
+
+    def no_rebuild(*a, **kw):
+        raise AssertionError("MinHash state rebuilt instead of healed")
+
+    monkeypatch.setattr(dedup, "minhash_corpus_state_build", no_rebuild)
+    # a near-dup of the doc admitted in batch 1 is rejected through the
+    # healed state; a fresh doc is admitted
+    run_batch([([0.0, 2.0], wrap(novel.replace("three", "xyz"))),
+               ([0.0, 3.0], wrap("fresh unrelated content nothing matches"))],
+              "append")
+    assert os.path.isdir(f"{state_dir}/bands")
+    assert not os.path.exists(f"{state_dir}/_old_bands")
+    docs = sorted(r["doc"]["t"] for r in store.head(10))
+    assert store.count() == 3
+    assert not any("xyz" in d for d in docs)
+
+
 def test_neardup_replay_self_match_does_not_drop_batch(spark, tmp_path):
     """ADVICE r4 (medium): foreachBatch is at-least-once — if a crash lands
     AFTER the state append but BEFORE the store append, the replayed batch

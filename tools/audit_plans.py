@@ -54,9 +54,7 @@ KNOWN_BNLJ: dict[str, str] = {
     "graph_ann_topk": _QVEC + " + 8 seed rows",
     "graph_ann_serving_topk": _QVEC
     + " + 1-row serving/hop-loop equality aggregate broadcast",
-    # fuzzy probes: literal query strings broadcast for the length band
-    "search_by_doc": "literal probe strings broadcast",
-    "fuzzy_topk_small": "literal probe strings broadcast",
+    # LCS kernel check: literal probe strings broadcast against the docs
     "indel_kernel_check": "literal probe strings broadcast",
     # corpus-scalar broadcasts
     "lm_quality_score": _SCALAR, "sketch_rollup_total": _SCALAR,

@@ -1,5 +1,5 @@
 from .distance import cosine_similarity, dot_product, l2_distance, l2_norm
-from .fuzzy import indel_distance_udf, indel_ratio
+from .fuzzy import indel_ratio
 from .jsonfn import json_path_col
 
 __all__ = [
@@ -7,7 +7,6 @@ __all__ = [
     "dot_product",
     "l2_distance",
     "l2_norm",
-    "indel_distance_udf",
     "indel_ratio",
     "json_path_col",
 ]

@@ -8,17 +8,14 @@ The reference scores with ``rapidfuzz.fuzz.ratio`` (``vector_store.py:377-382``)
 
 Implementation: rapidfuzz when importable (C++), else a bit-parallel LCS
 (Hyyrö/Crochemore — one big-int per pattern, O(len1 * len2 / wordsize)), which
-is exact and fast enough for document-length strings.  Exposed as an
-Arrow-batched pandas UDF so executors score whole partitions per call.
+is exact and fast enough for document-length strings.  ``indel_ratio_fn``
+is the one scorer: it builds a query's bitmask once and scores many docs
+against it — the fuzzy top-k kernel and the SQL UDFs go through it.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType
+from typing import Callable
 
 try:  # fast path — C++ scorer, bit-identical semantics to the reference
     from rapidfuzz import fuzz as _rf_fuzz
@@ -26,10 +23,9 @@ except ImportError:  # pragma: no cover - environment dependent
     _rf_fuzz = None
 
 
-def _lcs_length(a: str, b: str) -> int:
-    """Bit-parallel LCS length (Crochemore et al.); exact."""
-    if not a or not b:
-        return 0
+def _lcs_fn(a: str) -> Callable[[str], int]:
+    """``lcs(b)`` = LCS length of ``a`` and ``b``, bit-parallel (Crochemore
+    et al.), exact; ``a``'s position bitmask is built once."""
     # position bitmask per character of `a`
     pm: dict[str, int] = {}
     bit = 1
@@ -37,48 +33,45 @@ def _lcs_length(a: str, b: str) -> int:
         pm[ch] = pm.get(ch, 0) | bit
         bit <<= 1
     mask = (1 << len(a)) - 1
-    v = mask
-    for ch in b:
-        p = pm.get(ch, 0)
-        u = v & p
-        v = (v + u) | (v - u)
-        v &= mask
-    # LCS = number of zero bits of V within the mask
-    return len(a) - bin(v & mask).count("1")
+    get = pm.get
+
+    def lcs(b: str) -> int:
+        if not a or not b:
+            return 0
+        v = mask
+        for ch in b:
+            u = v & get(ch, 0)
+            v = ((v + u) | (v - u)) & mask
+        # LCS = number of zero bits of V within the mask
+        return len(a) - bin(v).count("1")
+
+    return lcs
+
+
+def _lcs_length(a: str, b: str) -> int:
+    """Bit-parallel LCS length (Crochemore et al.); exact."""
+    return _lcs_fn(a)(b)
+
+
+def indel_ratio_fn(query: str) -> Callable[[str | None], float]:
+    """``ratio(doc)`` == ``indel_ratio(query, doc or "")`` bit for bit, for
+    many docs against one query: the query's bitmask is built once.  The
+    InDel distance is ``100.0 - ratio(doc)`` (vector_store.py:387)."""
+    if _rf_fuzz is not None:
+        return lambda doc: float(_rf_fuzz.ratio(query, doc or ""))
+    lcs, lq = _lcs_fn(query), len(query)
+
+    def ratio(doc: str | None) -> float:
+        doc = doc or ""
+        total = lq + len(doc)
+        if total == 0:
+            return 100.0
+        return 100.0 * (1.0 - (total - 2 * lcs(doc)) / total)
+
+    return ratio
 
 
 def indel_ratio(s1: str, s2: str) -> float:
     """Normalized InDel similarity in [0, 100], == rapidfuzz.fuzz.ratio."""
-    if _rf_fuzz is not None:
-        return float(_rf_fuzz.ratio(s1, s2))
-    total = len(s1) + len(s2)
-    if total == 0:
-        return 100.0
-    dist = total - 2 * _lcs_length(s1, s2)
-    return 100.0 * (1.0 - dist / total)
+    return indel_ratio_fn(s1)(s2)
 
-
-def indel_distance_udf(query: str) -> Column:
-    """Column fn: InDel *distance* (= 100 - similarity, vector_store.py:387)
-    of a fixed query string against a string column."""
-
-    @pandas_udf(DoubleType())
-    def _score(docs: pd.Series) -> pd.Series:
-        if _rf_fuzz is not None:
-            return docs.map(lambda d: 100.0 - float(_rf_fuzz.ratio(query, d if d is not None else "")))
-        return docs.map(lambda d: 100.0 - indel_ratio(query, d if d is not None else ""))
-
-    def fn(col: Column | str) -> Column:
-        return _score(F.col(col) if isinstance(col, str) else col)
-
-    return fn
-
-
-@pandas_udf(DoubleType())
-def indel_similarity_pair_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Pairwise InDel similarity of two string columns (0-100)."""
-    if _rf_fuzz is not None:
-        return pd.Series(
-            [float(_rf_fuzz.ratio(x or "", y or "")) for x, y in zip(a, b)]
-        )
-    return pd.Series([indel_ratio(x or "", y or "") for x, y in zip(a, b)])

@@ -22,26 +22,18 @@ from pyspark.sql.types import DoubleType
 
 
 def register_sql_functions(spark: SparkSession) -> None:
-    from .fuzzy import _rf_fuzz, indel_ratio
+    from .fuzzy import indel_ratio
+
+    def ratios(a: pd.Series, b: pd.Series) -> list[float]:
+        return [indel_ratio(q or "", d) for q, d in zip(a, b)]
 
     @pandas_udf(DoubleType())
     def _indel_ratio_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        if _rf_fuzz is not None:
-            return pd.Series(
-                [float(_rf_fuzz.ratio(x or "", y or "")) for x, y in zip(a, b)]
-            )
-        return pd.Series([indel_ratio(x or "", y or "") for x, y in zip(a, b)])
+        return pd.Series(ratios(a, b), dtype=float)
 
     @pandas_udf(DoubleType())
     def _indel_distance_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        if _rf_fuzz is not None:
-            return pd.Series(
-                [100.0 - float(_rf_fuzz.ratio(x or "", y or ""))
-                 for x, y in zip(a, b)]
-            )
-        return pd.Series(
-            [100.0 - indel_ratio(x or "", y or "") for x, y in zip(a, b)]
-        )
+        return pd.Series([100.0 - r for r in ratios(a, b)], dtype=float)
 
     @pandas_udf(DoubleType())
     def _geomean_udf(v: pd.Series) -> float:

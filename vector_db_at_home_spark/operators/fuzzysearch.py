@@ -5,411 +5,143 @@ stored doc's RAW JSON serialization with rapidfuzz ``fuzz.ratio`` (InDel
 similarity), distance = 100 - similarity, keep top-k (score-descending;
 silently truncates when k > N).
 
-Spark shape: a two-phase exact plan so the O(len·len) scorer UDF runs on a
-candidate subset, not the whole corpus:
+Spark shape: ONE ``mapInArrow`` pass over the docs, then a driver merge —
+the shape of ``knn.knn_search_collect``.  Each task keeps, per query, the k
+best rows seen so far by ``(distance, id)``, carried across the partition's
+Arrow batches (so a task holds k·m rows, not its partition).  Within a
+batch it scores docs in order of the length lower bound
 
-1. **Provisional top-k by length bound.**  InDel distance
-   ``100·(len_d + len_q − 2·LCS) / (len_d + len_q)`` is bounded below by
-   ``100·|len_d − len_q| / (len_d + len_q)`` (``LCS ≤ min length``).  The k
-   docs with the smallest bound per query are scored exactly; the k-th
-   actual distance is a per-query threshold T_q.
-2. **Banded exact pass.**  Only docs whose bound ≤ T_q can beat the
-   provisional top-k (bound ≤ distance), so the scorer runs on that band
-   alone — typically a small fraction of the corpus when doc lengths vary.
-   Results are exactly the unfiltered top-k (the band is a proven superset;
-   ties at T_q are kept by the inclusive filter and resolved by id as
-   before).
+    ``100·|len_d − len_q| / (len_d + len_q)  ≤  InDel distance``
 
-``bound="multiset"`` tightens phase 2 with the character-multiset bound:
-``LCS ≤ Σ_c min(count_d(c), count_q(c))`` (a common subsequence is in
-particular a common multiset of characters), which dominates the length
-bound and shreds length-similar-but-alphabet-different docs from the band.
-Per-doc counts for the union of query characters are precomputed ONCE as an
-int-array projection (one ``len − len(replace)`` scan per char per doc, no
-UDF); the per-pair intersection is then ~|distinct(q)| integer ops.
-Measured at the bench shape (sf0.1: 5k docs × 2 queries, k=10, rapidfuzz
-scorer, best of 3): ``bound="length"`` 1.52 s vs ``bound="multiset"``
-2.03 s — the extra JVM evaluation of the per-char count array exceeds the
-scorer savings at this doc/query size, so the DEFAULT stays "length";
-flip to "multiset" when the scorer dominates — long docs, many
-length-similar candidates, or a large query batch (its band was measured
-strictly smaller: tests/test_fuzzy.py::test_multiset_band_is_tighter_than_length_band).
+(``LCS ≤ min length``) and stops once the bound passes the current k-th
+distance plus ``_BOUND_EPS``; a doc whose bound EQUALS the k-th distance is
+still scored, so ties are decided by id.  Each task emits its winners with
+every column plus ``query_id`` and ``distance``; the driver merges per
+query by ``(distance, id)`` and cuts to k.  No query broadcast, no
+shuffle, no window, no payload join.
 
-Phase 1 executes EAGERLY at build time (one small Spark job over narrow
-``(query_id, id, len)`` triples scoring only k·m docs); its k·m scores
-return to the driver, so in the returned phase-2 plan the per-query
-thresholds are literal predicates (no threshold join), the provisional
-rows are anti-filtered OUT of the band by a literal id predicate, and
-their already-known scores union back as a literal DataFrame.  Every
-(query, doc) candidate is therefore scored by the UDF EXACTLY ONCE
-(VERDICT r2/r3: the earlier lazy single-plan form re-scored the k·m
-provisional rows inside the band) and the main plan carries a single
-scorer node.  The full-width payload join happens after the final top-k,
-on k·m rows.
-
-Measured cost of the eager split at sf0.1 (5k docs × 2 queries): the
-phase-1 job is ~0.55-0.67 s, mostly fixed scheduling/AQE-stage overhead
-(AQE-off was measured slower, 0.70-0.75 s; a "narrow" phase-1 that
-windows only (query_id, id, len) triples and joins text back for the
-winners was also slower, +0.35 s of extra stages — WindowGroupLimit
-already keeps phase-1's shuffle at k rows per group per map task, text
-included, so the wide window IS the scale-safe shape).  Net vs the
-round-3 double-scoring plan: ~+0.25 s here, exactly-once at every scale.
+Measured (4 vCPUs, ``local[4]``, warm cached store of 20k docs in 4
+partitions, k=10, one query per call): ``VectorStore.search_by_doc`` went
+from 9 jobs and a median of ~974 ms per call (the earlier two-phase plan:
+an eager length-band phase-1 job, a literal-threshold band, a union, a
+window top-k and a payload join) to 1 job and ~280 ms.  The length bound
+barely prunes at that shape (88–99% of docs are still scored); the gain
+is the job count.
 """
 
 from __future__ import annotations
 
-from collections import Counter
+import bisect
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType
+import numpy as np
+from pyspark.sql import DataFrame, Row
+from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
-from ..functions.fuzzy import _rf_fuzz, indel_ratio
-from .topk import top_k_per_group
+from ..functions.fuzzy import indel_ratio_fn
 
-# double-rounding guard when comparing the length bound against the scored
-# threshold (both are the same rational computed via different IEEE op
+# double-rounding guard when comparing the length bound against a scored
+# distance (both are the same rational computed via different IEEE op
 # orders); InDel distances are quantized far coarser than this
 _BOUND_EPS = 1e-9
 
-# expression-size guard for the multiset bound: beyond this many
-# (query × distinct-char) when-chain terms, fall back to the length bound
-# (correctness unaffected; the band just widens)
-_MAX_MULTISET_TERMS = 4096
 
-# driver-side ceiling on the phase-1 result (k·m (query_id, id, dist)
-# triples, ~24 B each, collected to set the band thresholds): past ~1M rows
-# the eager-snapshot design itself is wrong for the batch — split the query
-# batch, or run prefilter=False (fully lazy, no driver state).  Same
-# contract as knn._MAX_QUERY_ROWS.
-_MAX_PROVISIONAL_ROWS = 1_048_576
+def _topk_kernel(queries: list[str], k: int, doc_col: str, id_col: str):
+    """``mapInArrow`` function: per task, each query's k best rows by
+    ``(distance, id)`` with all their columns plus query_id / distance."""
+    import pyarrow as pa
 
-# expression-size guard for the phase-2 band predicates: with at most this
-# many provisional (query_id, id, dist) rows, the per-query thresholds and
-# the scored-pair exclusion are inlined as literal predicates (zero extra
-# joins — the fast shape at interactive batch sizes); beyond it the same
-# rows ship back as ONE broadcast DataFrame and the band becomes a
-# broadcast threshold-join + broadcast anti-join, so the driver-side plan
-# stays O(1) expressions no matter how many thousand queries are screened
-# in a batch (the rows themselves are k·m tuples — broadcast-sized by
-# construction long past this threshold)
-_MAX_INLINE_LITERALS = 4096
+    def kernel(batches):
+        ratios = [indel_ratio_fn(q) for q in queries]
+        # per query: sorted [(distance, id, row position in `carry`)], <= k
+        best: list[list] = [[] for _ in queries]
+        carry = None  # pa.Table holding exactly the rows `best` points at
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            base = 0 if carry is None else carry.num_rows
+            docs = batch.column(doc_col).to_pylist()
+            ids = batch.column(id_col).to_pylist()
+            dlen = np.fromiter((len(d) if d else 0 for d in docs),
+                               dtype=np.float64, count=len(docs))
+            for q, ratio, top in zip(queries, ratios, best):
+                tot = dlen + len(q)
+                bound = np.divide(100.0 * np.abs(dlen - len(q)), tot,
+                                  out=np.zeros_like(tot), where=tot > 0)
+                order = np.argsort(bound, kind="stable").tolist()
+                bound = bound.tolist()
+                for i in order:
+                    if len(top) == k and bound[i] > top[-1][0] + _BOUND_EPS:
+                        break
+                    hit = (100.0 - ratio(docs[i]), ids[i], base + i)
+                    if len(top) < k or hit < top[-1]:
+                        bisect.insort(top, hit)
+                        del top[k:]
+            frame = pa.Table.from_batches([batch])
+            if carry is not None:
+                frame = pa.concat_tables([carry, frame])
+            keep = sorted({p for top in best for _, _, p in top})
+            at = {p: j for j, p in enumerate(keep)}
+            carry = frame.take(keep)
+            best = [[(d, i, at[p]) for d, i, p in top] for top in best]
+        if carry is None:
+            return
+        hits = [(qi, d, p) for qi, top in enumerate(best) for d, _, p in top]
+        out = carry.take([p for _, _, p in hits])
+        out = out.append_column(
+            "query_id", pa.array([qi for qi, _, _ in hits], pa.int32()))
+        out = out.append_column(
+            "distance", pa.array([d for _, d, _ in hits], pa.float64()))
+        yield from out.to_batches()
+
+    return kernel
 
 
-def _distance_udf(counter=None) -> Column:
-    """Arrow-batched InDel scorer.  ``counter`` (a SparkContext accumulator)
-    is incremented by the number of rows scored — the test hook proving the
-    exactly-once scoring contract."""
+def fuzzy_search_collect(df: DataFrame, queries: list[str], k: int,
+                         doc_col: str = "doc", id_col: str = "id"
+                         ) -> list[list[Row]]:
+    """Eager fuzzy top-``k`` of each query string against ``df`` in ONE
+    Spark job (module docstring).
 
-    @F.pandas_udf(DoubleType())
-    def score(q: pd.Series, docs: pd.Series) -> pd.Series:
-        if counter is not None:
-            counter.add(len(q))
-        if _rf_fuzz is not None:
-            return pd.Series(
-                [100.0 - float(_rf_fuzz.ratio(a or "", b or ""))
-                 for a, b in zip(q, docs)]
-            )
-        return pd.Series(
-            [100.0 - indel_ratio(a or "", b or "") for a, b in zip(q, docs)]
-        )
-
-    return score
-
-
-def _length_bound() -> Column:
-    """Lower bound on InDel distance from lengths alone."""
-    tot = F.col("__dlen") + F.col("__qlen")
-    return F.when(tot == 0, F.lit(0.0)).otherwise(
-        100.0 * F.abs(F.col("__dlen") - F.col("__qlen")) / tot
-    )
-
-
-def _charcount_col(queries: list[str]) -> Column:
-    """Per-DOC counts of every character appearing in any query, as one
-    int array — computed once per doc row, below the doc × query join."""
-    all_chars = sorted(set("".join(queries)))
-    return F.array(*[
-        F.length("__doc")
-        - F.length(F.replace(F.col("__doc"), F.lit(ch), F.lit("")))
-        for ch in all_chars
+    Returns, per query, up to ``k`` Rows carrying every ``df`` column plus
+    ``query_id`` and ``distance`` (``100 - indel_ratio(q, doc or "")``),
+    ordered ``(distance, id)``; ``k > N`` truncates silently
+    (tests.py:609-617), ``k <= 0`` raises (vector_store.py:361-364).
+    Point it at a cached DataFrame, or every call re-reads the docs."""
+    if k <= 0:
+        raise ValueError(f"k must be positive, got {k}")
+    if not queries:
+        return []
+    schema = StructType(df.schema.fields + [
+        StructField("query_id", IntegerType()),
+        StructField("distance", DoubleType()),
     ])
-
-
-def _multiset_bound(queries: list[str]) -> Column:
-    """Character-multiset lower bound on InDel distance; expects the
-    ``__cc`` per-doc count array from ``_charcount_col`` to be in scope.
-    ``Σ_c min ≤ min(len_d, len_q)`` makes this ≥ the length bound
-    pointwise, so the band it defines is a subset — still a superset of
-    the true top-k because it underestimates true distance."""
-    all_chars = sorted(set("".join(queries)))
-    pos = {ch: j for j, ch in enumerate(all_chars)}
-    inter: Column | None = None
-    for i, q in enumerate(queries):
-        terms: Column | None = None
-        for ch, qc in sorted(Counter(q).items()):
-            t = F.least(F.lit(qc), F.col("__cc")[pos[ch]])
-            terms = t if terms is None else terms + t
-        if terms is None:
-            terms = F.lit(0)
-        cond = F.col("query_id") == i
-        inter = (
-            F.when(cond, terms) if inter is None else inter.when(cond, terms)
-        )
-    tot = F.col("__dlen") + F.col("__qlen")
-    return F.when(tot == 0, F.lit(0.0)).otherwise(
-        100.0 * (tot - 2.0 * inter.cast("double")) / tot
-    )
-
-
-def _use_multiset(queries: list[str], bound: str) -> bool:
-    if bound == "length":
-        return False
-    if bound != "multiset":
-        raise ValueError(f"bound must be 'length' or 'multiset', got {bound!r}")
-    n_terms = sum(len(set(q)) for q in queries)
-    return 0 < n_terms <= _MAX_MULTISET_TERMS
-
-
-def _query_df(store: DataFrame, queries: list[str]) -> DataFrame:
-    spark = store.sparkSession
-    return spark.createDataFrame(
-        [(i, q, len(q)) for i, q in enumerate(queries)],
-        "query_id int, __q string, __qlen int",
-    )
-
-
-def _provisional_scores(banded: DataFrame, k: int, score: Column,
-                        n_queries: int) -> list:
-    """EAGER phase 1: the k docs with the smallest length bound per query,
-    scored exactly — one small job over ``(query_id, id, __lb)`` triples
-    plus k·m scorer rows; returns ``[(query_id, id, dist)]`` Rows."""
-    if n_queries * k > _MAX_PROVISIONAL_ROWS:
-        raise ValueError(
-            f"query batch needs {n_queries * k} provisional rows "
-            f"(k x queries), over the {_MAX_PROVISIONAL_ROWS} driver-side "
-            "ceiling of the banded plan — split the query batch, or pass "
-            "prefilter=False for a fully lazy plan with no driver state"
-        )
-    provisional = top_k_per_group(
-        banded.select("query_id", "id", "__q", "__doc", "__lb"),
-        ["query_id"],
-        [F.col("__lb").asc(), F.col("id").asc()],
-        k,
-    )
-    return provisional.select(
-        "query_id", "id", score(F.col("__q"), F.col("__doc")).alias("dist")
-    ).collect()
-
-
-def _threshold_pred(rows: list, band_lb: Column) -> Column:
-    """``band_lb <= T_q + eps`` with the per-query thresholds T_q (max
-    provisional distance) inlined as literals — no threshold join."""
-    thresh: dict[int, float] = {}
-    for r in rows:
-        t = thresh.get(r.query_id)
-        thresh[r.query_id] = r.dist if t is None else max(t, r.dist)
-    if not thresh:
-        return F.lit(False)
-    pred: Column | None = None
-    for qid, t in sorted(thresh.items()):
-        c = (F.col("query_id") == qid) & (band_lb <= F.lit(t + _BOUND_EPS))
-        pred = c if pred is None else pred | c
-    return pred
-
-
-def _not_provisional_pred(rows: list) -> Column:
-    """Excludes the already-scored provisional ``(query_id, id)`` pairs
-    from the band — a literal NOT-IN predicate (k ids per query)."""
-    by_q: dict[int, list] = {}
-    for r in rows:
-        by_q.setdefault(r.query_id, []).append(r.id)
-    pred: Column | None = None
-    for qid, ids in sorted(by_q.items()):
-        c = (F.col("query_id") == qid) & F.col("id").isin(ids)
-        pred = c if pred is None else pred | c
-    return F.lit(True) if pred is None else ~pred
-
-
-def _apply_band(banded: DataFrame, rows: list, band_lb: Column,
-                id_type, exclude_provisional: bool) -> DataFrame:
-    """Filter ``banded`` to the phase-2 band defined by the provisional
-    scores in ``rows``, optionally minus the provisional pairs themselves.
-
-    Two physically different, semantically identical forms:
-
-    - ``len(rows) <= _MAX_INLINE_LITERALS``: literal predicates (an OR-chain
-      of m threshold terms and a NOT-IN of k·m pair ids) — no join, the
-      cheapest plan for interactive batch sizes;
-    - larger batches: the k·m rows become a single broadcast DataFrame; the
-      threshold is a broadcast equi-join on ``query_id`` (m rows) and the
-      exclusion a broadcast anti-join on ``(query_id, id)``, keeping the
-      driver-side expression tree and Catalyst analysis time O(1) in the
-      batch size (VERDICT r4: thousand-query screening batches would
-      otherwise balloon the plan).
-    """
-    if len(rows) <= _MAX_INLINE_LITERALS:
-        pred = _threshold_pred(rows, band_lb)
-        if exclude_provisional:
-            pred = pred & _not_provisional_pred(rows)
-        return banded.filter(pred)
-
-    from pyspark.sql.types import (
-        DoubleType as _D,
-        IntegerType as _I,
-        StructField,
-        StructType,
-    )
-
-    spark = banded.sparkSession
-    thresh: dict[int, float] = {}
-    for r in rows:
-        t = thresh.get(r.query_id)
-        thresh[r.query_id] = r.dist if t is None else max(t, r.dist)
-    tdf = spark.createDataFrame(
-        [(qid, float(t)) for qid, t in sorted(thresh.items())],
-        StructType([StructField("query_id", _I()),
-                    StructField("__t", _D())]),
-    )
-    out = (
-        banded.join(F.broadcast(tdf), "query_id")
-        .filter(band_lb <= F.col("__t") + _BOUND_EPS)
-        .drop("__t")
-    )
-    if exclude_provisional:
-        pairs = spark.createDataFrame(
-            [(r.query_id, r.id) for r in rows],
-            StructType([StructField("query_id", _I()),
-                        StructField("id", id_type)]),
-        )
-        out = out.join(F.broadcast(pairs), ["query_id", "id"], "left_anti")
-    return out
-
-
-def fuzzy_candidates(store: DataFrame, queries: list[str], k: int,
-                     doc_col: str = "doc",
-                     id_col: str = "id",
-                     bound: str = "length") -> DataFrame:
-    """The banded candidate set ``(query_id, id)`` whose exact scores
-    determine the result (provisional rows included — they are a subset of
-    the band by construction, since their distances bound the threshold) —
-    exposed for candidate-volume and band-superset assertions;
-    ``fuzzy_search_by_doc`` scores exactly this set, each pair once."""
-    qdf = _query_df(store, queries)
-    multiset = _use_multiset(queries, bound)
-    lens = store.select(
-        F.col(id_col).alias("id"),
-        F.length(F.coalesce(F.col(doc_col), F.lit(""))).alias("__dlen"),
-        F.coalesce(F.col(doc_col), F.lit("")).alias("__doc"),
-    )
-    if multiset:
-        lens = lens.withColumn("__cc", _charcount_col(queries))
-    banded = lens.join(F.broadcast(qdf)).withColumn("__lb", _length_bound())
-
-    rows = _provisional_scores(banded, k, _distance_udf(), len(queries))
-    band_lb = _multiset_bound(queries) if multiset else F.col("__lb")
-    id_type = lens.schema["id"].dataType
-    return _apply_band(
-        banded, rows, band_lb, id_type, exclude_provisional=False
-    ).select("query_id", "id")
+    kernel = _topk_kernel(list(queries), k, doc_col, id_col)
+    out: list[list] = [[] for _ in queries]
+    for r in df.mapInArrow(kernel, schema).collect():
+        out[r.query_id].append(r)
+    return [sorted(rs, key=lambda r: (r.distance, r[id_col]))[:k]
+            for rs in out]
 
 
 def fuzzy_search_by_doc(store: DataFrame, queries: list[str], k: int,
-                        doc_col: str = "doc", id_col: str = "id",
-                        prefilter: bool = True,
-                        bound: str = "length",
-                        score_counter=None) -> DataFrame:
-    """Top-k fuzzy matches per query; returns
-    ``(query_id, id, vec, doc, distance)`` — all store columns plus
-    query_id/distance, exactly the unfiltered result.
+                        doc_col: str = "doc", id_col: str = "id"
+                        ) -> DataFrame:
+    """Top-k fuzzy matches per query as a DataFrame
+    ``(query_id, <id_col>, <other store columns>, distance)`` ordered by
+    ``(query_id, distance, id)`` — :func:`fuzzy_search_collect`'s rows.
 
-    ``prefilter=False`` disables the length band (scores every (query, doc)
-    pair) — the small-N baseline the banded plan is tested against.
-    ``bound`` picks the phase-2 band predicate (module docstring).
-    ``score_counter`` (an accumulator) counts scorer invocations.
-
-    ``k > N`` truncates silently (parity: tests.py:609-617); ``k <= 0``
-    raises (vector_store.py:361-364).
-
-    **Snapshot semantics** (with ``prefilter=True``, the default): phase 1
-    runs an EAGER Spark job at build time and freezes its per-query
-    thresholds and provisional scores into the returned plan, so the
-    returned DataFrame is bound to the store contents AT BUILD TIME — if
-    rows are appended to (or deleted from) the underlying store between
-    building and executing/re-executing this frame, re-plan by calling
-    ``fuzzy_search_by_doc`` again rather than re-executing the stale frame
-    (its frozen band may exclude the new rows).  ``prefilter=False`` keeps
-    the old fully-lazy single-plan contract.
-    """
-    if k <= 0:
-        raise ValueError(f"k must be positive, got {k}")
-    qdf = _query_df(store, queries)
-    score = _distance_udf(score_counter)
-    multiset = prefilter and _use_multiset(queries, bound)
-
-    narrow = store.select(
-        F.col(id_col).alias("id"),
-        F.coalesce(F.col(doc_col), F.lit("")).alias("__doc"),
-        F.length(F.coalesce(F.col(doc_col), F.lit(""))).alias("__dlen"),
+    **Snapshot semantics:** the search runs EAGERLY at build time and the
+    returned DataFrame holds its result rows, so it is bound to the store
+    contents AT BUILD TIME — if rows are appended to (or deleted from) the
+    underlying store, call ``fuzzy_search_by_doc`` again rather than
+    re-executing the stale frame."""
+    hits = fuzzy_search_collect(store, queries, k, doc_col, id_col)
+    cols = [id_col] + [c for c in store.columns if c != id_col]
+    schema = StructType(
+        [StructField("query_id", IntegerType())]
+        + [store.schema[c] for c in cols]
+        + [StructField("distance", DoubleType())]
     )
-    if multiset:
-        narrow = narrow.withColumn("__cc", _charcount_col(queries))
-    banded = narrow.join(F.broadcast(qdf)).withColumn("__lb", _length_bound())
-
-    prov_literal: DataFrame | None = None
-    if prefilter:
-        # provisional selection ranks by the CHEAP length bound (any k
-        # candidates are valid — they only set the threshold); the tight
-        # multiset bound, when enabled, is evaluated exactly once, in the
-        # band filter, where it pays by shrinking the scored set.  The k·m
-        # scores come back to the driver (tiny), so the band below both
-        # inlines the thresholds as literals AND excludes the provisional
-        # rows — nothing is ever scored twice.
-        rows = _provisional_scores(banded, k, score, len(queries))
-        band_lb = _multiset_bound(queries) if multiset else F.col("__lb")
-        id_type = narrow.schema["id"].dataType
-        banded = _apply_band(
-            banded, rows, band_lb, id_type, exclude_provisional=True
-        )
-        from pyspark.sql.types import (
-            DoubleType as _D,
-            IntegerType as _I,
-            StructField,
-            StructType,
-        )
-
-        prov_literal = store.sparkSession.createDataFrame(
-            [(r.query_id, r.id, float(r.dist)) for r in rows],
-            StructType([
-                StructField("query_id", _I()),
-                StructField("id", id_type),
-                StructField("distance", _D()),
-            ]),
-        )
-
-    scored = banded.select(
-        "query_id", "id", score(F.col("__q"), F.col("__doc")).alias("distance")
-    )
-    if prov_literal is not None:
-        scored = scored.unionByName(prov_literal)
-    topk = top_k_per_group(
-        scored,
-        ["query_id"],
-        [F.col("distance").asc(), F.col("id").asc()],
-        k,
-    )
-    # payload join after the top-k: k·m wide rows, not N·m; the id column
-    # keeps its original name (callers select e.g. ``doc_id`` by name)
-    return (
-        topk.withColumnRenamed("id", id_col)
-        .join(store, id_col)
-        .select(
-            "query_id",
-            id_col,
-            *[c for c in store.columns if c != id_col],
-            "distance",
-        )
-        .orderBy("query_id", "distance", id_col)
-    )
+    rows = [(r.query_id, *(r[c] for c in cols), r.distance)
+            for rs in hits for r in rs]
+    return store.sparkSession.createDataFrame(rows, schema)

@@ -325,8 +325,8 @@ def q_search_by_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fuzzy InDel top-k over documents.text (vector_store.py:358-401).
     FULLY value-oracled since r8: the anti-diagonal recursive-CTE LCS
     (see _search_by_doc_oracle_sql) ranks the ENTIRE corpus in DuckDB,
-    so the banded machinery's top-k — band superset, exactly-once
-    scoring, (distance, doc_id) rank — hash-compares end to end at
+    so the one-pass top-k — per-task length-bound early stop, driver
+    merge, (distance, doc_id) rank — hash-compares end to end at
     every scale (previously rows-only with slice-bounded compensation
     queries)."""
     from .operators.fuzzysearch import fuzzy_search_by_doc
@@ -2934,14 +2934,15 @@ FROM r WHERE rn <= {k} ORDER BY query_id, distance, doc_id
 
 @register("fuzzy_topk_small")
 def q_fuzzy_topk_small(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The REAL banded fuzzy-search machinery (eager phase-1, literal
-    thresholds, exactly-once scoring, WindowGroupLimit top-k, payload
-    join) value-checked END-TO-END against a full DP ranking — possible
-    because the 50-doc × 48-char slice keeps the row-scan recursive-CTE
-    oracle tractable.  Historically this plus indel_kernel_check were
-    search_by_doc's compensation; since r8 the full query carries its
-    own whole-corpus oracle (anti-diagonal CTE) and this slice check
-    remains as the fast regression pin for the band machinery."""
+    """The REAL fuzzy-search machinery (one mapInArrow pass: per-task
+    length-bound early stop and running top-k, driver merge by
+    (distance, id)) value-checked END-TO-END against a full DP ranking —
+    possible because the 50-doc × 48-char slice keeps the row-scan
+    recursive-CTE oracle tractable.  Historically this plus
+    indel_kernel_check were search_by_doc's compensation; since r8 the
+    full query carries its own whole-corpus oracle (anti-diagonal CTE)
+    and this slice check remains as the fast regression pin for the
+    top-k machinery."""
     from .operators.fuzzysearch import fuzzy_search_by_doc
 
     docs = load_table(spark, sf_dir, "documents").filter(

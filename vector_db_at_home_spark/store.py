@@ -11,11 +11,12 @@ truth (SURVEY.md §1.4).  The cache is keyed by (current version, part files
 of that version's dir), so appends by any writer — this instance, another
 instance on the same root, ``stream_into_store`` — are seen by the next read.
 
-Read model: ``count()`` answers from the cache (no job); ``search`` is one
-Spark job (``operators.knn.knn_search_collect`` over the cached snapshot,
+Read model: ``count()`` answers from the cache (no job); ``search`` and
+``search_by_doc`` are one Spark job each (``operators.knn.knn_search_collect``
+and ``operators.fuzzysearch.fuzzy_search_collect`` over the cached snapshot,
 payloads riding along — no count, no broadcast, no shuffle, no payload
-join); ``select_ids``, ``query_by_doc`` and ``search_by_doc`` scan the
-cached snapshot instead of re-reading parquet.
+join); ``select_ids`` and ``query_by_doc`` scan the cached snapshot instead
+of re-reading parquet.
 
 Write model (designed for object storage at scale):
 - ``insert``  → append new parquet files into the current snapshot dir
@@ -45,6 +46,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from .operators.fuzzysearch import fuzzy_search_collect
 from .operators.knn import knn_search_collect
 from .schema import VECTOR_SCHEMA
 
@@ -474,18 +476,17 @@ class VectorStore:
         # vector_store.py:358-401 — fuzzy InDel top-k over raw doc JSON
         # strings; k <= 0 raises, k > N silently truncates (the reference's
         # asymmetry with search, tests.py:600-617).
+        # One Spark job over the cached snapshot, payloads riding along.
         if k <= 0:
             raise ValueError(f"k must be positive, got {k}")
-        from .operators.fuzzysearch import fuzzy_search_by_doc
-
         normalized = [
             _json_dump(q) if isinstance(q, dict) else str(q) for q in query_docs
         ]
-        hits = fuzzy_search_by_doc(self._snapshot().df, normalized, k)
-        out: list[list] = [[] for _ in normalized]
-        for r in hits.collect():
-            out[r.query_id].append(r)
-        return [_search_records(rs) for rs in out]
+        snap = self._snapshot()
+        if snap.n == 0:
+            return [[] for _ in normalized]
+        return [_search_records(hits)
+                for hits in fuzzy_search_collect(snap.df, normalized, k)]
 
     def dump_vecs(self) -> np.ndarray:
         # vector_store.py:403-404 — full (n, dim) matrix in id order

@@ -167,10 +167,16 @@ def stream_into_store_neardup(stream_df: DataFrame, store: VectorStore,
         spark = batch_df.sparkSession
         if state_dir is not None:
             from ..operators.dedup import (
+                _MINHASH_APPENDED,
                 minhash_corpus_state_build,
                 minhash_lsh_pairs_incremental_prepared,
             )
+            from ..operators.maintenance import recover_compact_crash
 
+            # heal a crash inside a compact's swap first: a table parked at
+            # _old_<name> is renamed back, not rebuilt from the store
+            for name in _MINHASH_APPENDED:
+                recover_compact_crash(spark, f"{state_dir}/{name}")
             if not _fs_exists(spark, f"{state_dir}/bands"):
                 minhash_corpus_state_build(
                     corpus_docs, state_dir, "text", "doc_id", n=shingle_n,
